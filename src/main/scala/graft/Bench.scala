@@ -57,35 +57,35 @@ object Bench {
       // 8 shuffle partitions = the streaming keys' own config
       // (Streaming.withStreamShuffle) so the per-partition state-store
       // instances this warms are the ones the real keys reuse
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      val wq = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
-        .parquet(stmp)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("id")
-        .groupBy("id").count()
-        .writeStream.format("memory").queryName("graft_warm_stream")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      wq.awaitTermination()
-      // second streaming init shape: the SYMMETRIC-HASH-JOIN state
-      // store (stream-stream joins) loads a different provider path
-      // than the agg/dedup store warmed above — r8's driver run showed
-      // stream_stream_left_outer at 8.8 s (idle anchor ~3 s) because
-      // whichever stream-stream key ran first absorbed that init.
-      val jq = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
-        .parquet(stmp).withWatermark("ts", "1 hour")
-        .join(spark.readStream.schema("id BIGINT, ts TIMESTAMP")
-            .parquet(stmp).toDF("jid", "jts")
-            .withWatermark("jts", "1 hour"),
-          org.apache.spark.sql.functions.expr(
-            "id = jid AND jts BETWEEN ts AND ts + INTERVAL 1 HOUR"))
-        .writeStream.format("memory").queryName("graft_warm_join")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      jq.awaitTermination()
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      SessionScope.withConf(spark)("spark.sql.shuffle.partitions" -> "8") {
+        val wq = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
+          .parquet(stmp)
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("id")
+          .groupBy("id").count()
+          .writeStream.format("memory").queryName("graft_warm_stream")
+          .outputMode("complete")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        wq.awaitTermination()
+        // second streaming init shape: the SYMMETRIC-HASH-JOIN state
+        // store (stream-stream joins) loads a different provider path
+        // than the agg/dedup store warmed above — an r8 board run showed
+        // stream_stream_left_outer at 8.8 s (idle anchor ~3 s) because
+        // whichever stream-stream key ran first absorbed that init.
+        val jq = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
+          .parquet(stmp).withWatermark("ts", "1 hour")
+          .join(spark.readStream.schema("id BIGINT, ts TIMESTAMP")
+              .parquet(stmp).toDF("jid", "jts")
+              .withWatermark("jts", "1 hour"),
+            org.apache.spark.sql.functions.expr(
+              "id = jid AND jts BETWEEN ts AND ts + INTERVAL 1 HOUR"))
+          .writeStream.format("memory").queryName("graft_warm_join")
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        jq.awaitTermination()
+      }
       // unigram-fit shape: eager localCheckpoint of a token-count
       // synopsis + a broadcast scoring join — text_perplexity_buckets
       // ran 5.1× its anchor in the r8 driver bench when it was the
@@ -103,9 +103,8 @@ object Bench {
         .join(org.apache.spark.sql.functions.broadcast(
           wtok.limit(100)), Seq("w"), "left")
         .selectExpr("sum(count)").collect()
-      // events.parquet footer + the nanos-timestamp read path: every
-      // streaming key scans it via Tables.events' schema probe
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // events.parquet footer: every streaming key scans it via
+      // Tables.events' schema probe
       spark.read.parquet(s"$sfDir/events.parquet").selectExpr("count(*)")
         .collect()
     } catch { case _: Throwable => () }
@@ -125,29 +124,8 @@ object Bench {
     // speedup — the exact r7 confusion. Errored keys appear ONLY in
     // n_errors/error_keys.
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // SPARK_GRAFT_CLEAN=1: drop accumulated session state BETWEEN keys
-    // (outside every timed window) — the r9→r10 A/B probe for the
-    // +16% clean-anchor creep on unchanged code (VERDICT r9 #3).
-    // Three accumulation channels exist by construction: the cache
-    // manager (keys that .cache() and unpersist on their happy path
-    // still leak on any exception), persisted RDDs the CC/WCC loops
-    // deliberately leave behind for their returned frame, and the
-    // memory-sink temp views every streaming drain() registers (one
-    // per streaming key per run, each pinning its result rows).
-    val cleanBetween = sys.env.get("SPARK_GRAFT_CLEAN").contains("1")
-    def cleanSession(): Unit = if (cleanBetween) {
-      try {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.listTables().collect()
-          .filter(t => t.isTemporary && t.name.startsWith("graft_"))
-          .foreach(t => spark.catalog.dropTempView(t.name))
-      } catch { case _: Throwable => () }
-    }
     def timeKey(name: String, fn: (SparkSession, String) => DataFrame,
                 recordError: Boolean = true): Option[Double] = {
-      cleanSession()
       if (winSweep) WindowAudit.currentKey = name
       val t0 = System.nanoTime()
       try {

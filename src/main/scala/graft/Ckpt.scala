@@ -17,9 +17,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `DataFrame.unpersist()` cannot do this — it only drops cache-manager
   * entries, and a localCheckpoint never enters the cache manager. The
   * blocks belong to the checkpointed RDD inside the frame's LogicalRDD
-  * leaf, so the free must reach THAT rdd — the componentsStar
-  * `release()` discipline (Clustering.scala), generalized to
-  * Dataset-level checkpoints.
+  * leaf, so the free must reach THAT rdd — the `unpersistPrev`
+  * discipline of Clustering.components, generalized to Dataset-level
+  * checkpoints.
   *
   * SAFETY CONTRACT (why this is a named helper, not an inline
   * `.rdd.unpersist()`): an unpersisted local checkpoint CANNOT be

@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
   * (see TESTDATA.md). All `SparkEntry.queries` closures read their
   * inputs through here so that:
   *
-  *   - the ns-timestamp landmine in `events.parquet` (parquet
-  *     `INT64 TIMESTAMP(NANOS)`, which Spark 4.x refuses to read by
-  *     default) is handled in exactly one place, and
+  *   - the `events.ts` timestamp normalization is done in exactly one
+  *     place, and
   *   - at 100 TB scale the load path is a single choke-point where
   *     bucketing / table-format options would be introduced.
   *
@@ -48,50 +47,27 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** The `events.parquet` fixture has shipped `ts` in TWO physical
-    * encodings across driver testdata generations:
-    *
-    *   - INT64 TIMESTAMP(NANOS,false): Spark 4.1 throws
-    *     [PARQUET_TYPE_ILLEGAL] unless
-    *     `spark.sql.legacy.parquet.nanosAsLong=true`, which surfaces
-    *     the column as LongType ns-since-epoch. Integer division
-    *     (`div`) truncates ns → µs exactly (a double divide would lose
-    *     low-order bits at 1.7e18 ns); DuckDB truncates identically.
-    *   - plain `timestamp[us]` (the 2026-08-13 regeneration): Spark
-    *     reads TIMESTAMP_NTZ. With the session timezone pinned to UTC
-    *     (Verify/Bench/tests all do), casting NTZ → TimestampType is
-    *     wall-clock-preserving and lands on the same µs instants
-    *     DuckDB sees, so oracles are unaffected.
-    *
-    * Normalizing here — on the ONE choke-point loader — is what kept
-    * the blast radius of the schema flip to a single file. Downstream
-    * operators always see `ts: TimestampType` (µs, UTC).
-    */
+  /** The `events.parquet` fixture stores `ts` as plain `timestamp[us]`,
+    * which Spark reads as TIMESTAMP_NTZ. With the session timezone
+    * pinned to UTC (Verify/Bench/tests all do), casting NTZ →
+    * TimestampType is wall-clock-preserving and lands on the same µs
+    * instants DuckDB sees, so oracles are unaffected. Downstream
+    * operators always see `ts: TimestampType` (µs, UTC). Round8Spec
+    * fails the suite if a fixture ever ships another encoding. */
   private[graft] def normalizeEventsTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
         df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df // already TimestampType
     }
 
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventsTs(load(spark, sfDir, "events"))
-  }
 
   /** Raw events with ts as Long nanoseconds-since-epoch (for ops that
-    * want the exact integer value, e.g. fingerprinting). Under the
-    * µs-physical schema the ns value is reconstructed as µs × 1000. */
-  def eventsRawNanos(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(spark, sfDir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => df
-      case _ =>
-        df.withColumn("ts",
-          unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)) * lit(1000L))
-    }
-  }
+    * want the exact integer value, e.g. fingerprinting), reconstructed
+    * from the µs timestamp as µs × 1000. */
+  def eventsRawNanos(spark: SparkSession, sfDir: String): DataFrame =
+    load(spark, sfDir, "events").withColumn("ts",
+      unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)) * lit(1000L))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** Aggregation operators beyond the flagship Q1 (SURVEY.md §2.4).
   *
@@ -71,17 +71,17 @@ object Aggregates {
     // Explicit GROUPING SETS (complements the rollup key): per-flag,
     // per-status, and grand-total levels in one pass, via the SQL
     // surface so the actual GROUPING SETS analyzer path is exercised.
-    "agg_grouping_sets_explicit" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("graft_lineitem_v")
-      s.sql(
-        """SELECT coalesce(l_returnflag, 'ALL') AS rf,
-          |       coalesce(l_linestatus, 'ALL') AS ls,
-          |       CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-          |       count(*) AS n
-          |FROM graft_lineitem_v
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |ORDER BY gid, rf, ls""".stripMargin)
-    }),
+    "agg_grouping_sets_explicit" -> ((s, d) =>
+      SessionScope.withViews(s)("graft_lineitem_v" -> Tables.lineitem(s, d)) {
+        s.sql(
+          """SELECT coalesce(l_returnflag, 'ALL') AS rf,
+            |       coalesce(l_linestatus, 'ALL') AS ls,
+            |       CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+            |       count(*) AS n
+            |FROM graft_lineitem_v
+            |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+            |ORDER BY gid, rf, ls""".stripMargin)
+      }),
 
     // Sketch-based percentiles — THE 100 TB percentile path (exact
     // percentile sorts per group; approx_percentile is a bounded-

@@ -44,46 +44,32 @@ object Clustering {
     * @param pairs two LongType columns `a`, `b` (undirected edges)
     * @return (n, lab) — lab = min node id reachable from n
     *
-    * Min-label propagation with pointer jumping; per-round state is
-    * one (node, label) row per node on 8 shuffle partitions (the
-    * iterative state here is sample-sized; on a cluster this knob
-    * sizes to component-state volume, not core count — restored after
-    * the loop, the returned frame re-plans lazily). Shared by
-    * dedup_cluster_cc and the composed pipeline_dedup_e2e. */
+    * Min-label propagation with pointer jumping, looped in the RDD API
+    * with one explicit HashPartitioner shared by the edge set and every
+    * round's label state. A per-round DataFrame loop pays Catalyst
+    * analysis plus a fresh LogicalRDD conversion each round (~0.5 s ×
+    * 8 rounds of a 4.5–6 s key at sf0.1); here rounds are
+    * partitioner-co-located joins with ZERO per-round planning —
+    * edges⋈labels and the pointer jump are narrow, only the
+    * neighbor-min reduceByKey and the two key-rotations shuffle, and
+    * each round is ONE job whose fixpoint detection rides the
+    * materialization accumulator (exit on exactly zero changes — task
+    * retries can only overcount, so detection stays sound on a real
+    * cluster). At 10⁹ nodes the same code holds: the partitioner sizes
+    * to state volume and every structure is (Long, Long) pairs
+    * partitioned by node — the GraphX execution shape without the
+    * dependency. This is the documented "rarely: genuine iterative
+    * fixpoint" RDD exception to the DataFrame-first rule (SURVEY §1.3)
+    * — the declared API surface stays DataFrame on both ends. Shared by
+    * dedup_cluster_cc and the composed pipeline_dedup_e2e.
+    *
+    * Measured alternatives that lost at fixture scale: a double
+    * pointer jump (same 12 rounds), two propagate+jump steps per
+    * materialization (~40% slower: step 1 re-executes inside step 2),
+    * and large-star/small-star contraction (Kiveris et al. SOCC'14: 6
+    * rounds instead of 12, but 2 materializations per round; it only
+    * pays when edges ≫ nodes). */
   private[graft] def components(verts: DataFrame, pairs: DataFrame): DataFrame = {
-    // GRAFT_CC_ALGO selects the A/B implementations: "star" = the
-    // large-star/small-star contraction (componentsStar), "sql" = the
-    // per-round DataFrame loop (componentsSql, the r5–r8 default).
-    // All three produce identical min-labels; the default is the r9
-    // partitioner-pinned RDD loop (componentsRdd) — see its doc for
-    // the A/B numbers that flipped the default.
-    sys.env.get("GRAFT_CC_ALGO") match {
-      case Some("star") => componentsStar(verts, pairs)
-      case Some("sql")  => componentsSql(verts, pairs)
-      case _            => componentsRdd(verts, pairs)
-    }
-  }
-
-  /** r9 default: the same min-label + pointer-jump fixpoint as
-    * [[componentsSql]], but the LOOP runs in the RDD API with one
-    * explicit HashPartitioner shared by the edge set and every round's
-    * label state. Why this wins (A/B at sf0.1, warm, same ANN graph):
-    * the SQL loop pays per-round Catalyst analysis + a fresh
-    * LogicalRDD conversion (~0.5 s/round × 8 rounds ≈ 4 s of the
-    * 4.5–6 s key); here rounds are partitioner-co-located joins with
-    * ZERO per-round planning — edges⋈labels and the pointer jump are
-    * narrow, only the neighbor-min reduceByKey and the two
-    * key-rotations shuffle, and each round is ONE job whose fixpoint
-    * detection rides the materialization accumulator (exit on exactly
-    * zero changes — task retries can only overcount, so detection
-    * stays sound on a real cluster). At 10⁹ nodes the same code holds:
-    * the partitioner sizes to state volume and every structure is
-    * (Long, Long) pairs partitioned by node — this is the GraphX
-    * execution shape without the dependency. This is the documented
-    * "rarely: genuine iterative fixpoint" RDD exception to the
-    * DataFrame-first rule (SURVEY §1.3) — the declared API surface
-    * stays DataFrame on both ends. */
-  private[graft] def componentsRdd(verts: DataFrame, pairs: DataFrame): DataFrame = {
     val s = verts.sparkSession
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
@@ -107,7 +93,6 @@ object Clustering {
     var unpersistPrev: () => Unit = { val l = labels; () => { l.unpersist(); () } }
     var changed = 1L
     var iter = 0
-    val tLoop0 = System.nanoTime()
     while (changed > 0 && iter < 16) {
       // (1) neighbor min: edges⋈labels is NARROW (both by src=node);
       // the min-combine shuffles once, landing back on `part`
@@ -137,9 +122,6 @@ object Clustering {
       unpersistPrev = () => { next.unpersist(); () }
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[componentsRdd] round=$iter changed=$changed" +
-          f" t=${(System.nanoTime() - tLoop0) / 1e9}%.2f")
     }
     edges.unpersist()
     // final persisted round stays cached; the returned frame reads it
@@ -150,203 +132,6 @@ object Clustering {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("lab",
           org.apache.spark.sql.types.LongType))))
-  }
-
-  /** r5–r8 default, kept for A/B via GRAFT_CC_ALGO=sql. */
-  private[graft] def componentsSql(verts: DataFrame, pairs: DataFrame): DataFrame = {
-    val s = verts.sparkSession
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-        .cache()
-      var labels = verts.select(col("n"), col("n").as("lab")).cache()
-      // Size the loop's shuffles to STATE VOLUME, not core count: the
-      // per-round frames hold one (node, label) row per node, and with
-      // ~12 rounds × ~5 stages each, every surplus partition multiplies
-      // into hundreds of near-empty tasks (r6: 400 sample nodes on 8
-      // partitions spent the whole 4.6 s budget on task overhead). A
-      // ~500k-rows-per-partition target gives 2 partitions at sample
-      // scale and grows to thousands at 10⁹ nodes. The vertex count is
-      // one cheap job over the caller's cached sample.
-      val nNodes = labels.count()
-      val parts = math.min(2048L, math.max(2L, nNodes / 500000L + 1L))
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      // releases the round currently HOLDING cached blocks (labels
-      // itself becomes a stats-reset wrapper whose unpersist would be
-      // a no-op — see below)
-      var unpersistPrev: () => Unit = { val l = labels; () => { l.unpersist(); () } }
-      var changed = 1L
-      var iter = 0
-      val tLoop0 = System.nanoTime()
-      while (changed > 0 && iter < 16) {
-        // (1) neighbor min
-        val nbr = edges.join(labels, edges("src") === labels("n"))
-          .select(edges("dst").as("n2"), labels("lab").as("nl"))
-          .groupBy("n2").agg(min(col("nl")).as("nl"))
-        // carry the prior label through so fixpoint detection can ride
-        // the materialization pass (accumulator below), not an extra
-        // per-round job
-        val m1 = labels.join(nbr, labels("n") === nbr("n2"), "left")
-          .select(labels("n"), labels("lab").as("old"),
-            least(labels("lab"), coalesce(col("nl"), labels("lab"))).as("lab"))
-        // (2) pointer jump: lab := lab(lab) — labels only decrease and
-        // every label is itself a node, so the lookup always hits.
-        // (A double jump was tried for the r5 ANN chain graphs and did
-        // NOT reduce the round count — 12 rounds either way at sf0.1 —
-        // so the extra per-round join is not paid. r6 negative result:
-        // batching TWO propagate+jump steps per checkpoint cut blocks
-        // 12→7 but ran ~40% SLOWER A/B'd under identical load — with
-        // no materialization between steps, step 1's subplan is
-        // re-executed ~4x inside step 2's two self-references. The
-        // eager per-step checkpoint IS the cheap configuration.
-        // r7 THIRD negative result: alternating large-star/small-star
-        // contraction (componentsStar below, Kiveris et al. SOCC'14)
-        // converges in 6 rounds vs 12 here on the same ANN graph but
-        // benches 6.6–7.7 s vs 5.2–6.0 s at sf0.1 — each star round
-        // pays 2 materializations + 2 fingerprint aggs + 2 distinct
-        // shuffles vs ONE fused job here, and at sample scale job
-        // overhead, not propagation depth, is the budget. Star's real
-        // advantage (edge-set shrinkage: state is edges, and stars
-        // compress) only pays when edges ≫ nodes; keep it selectable
-        // via GRAFT_CC_ALGO=star for such graphs, default stays here.)
-        val j = m1.select(col("n").as("jn"), col("lab").as("jlab"))
-        // Materialize the round into a persisted RDD (truncating
-        // lineage — each round references the prior round's frame
-        // TWICE, neighbor join + pointer jump, so the logical plan
-        // would double per round and planning itself blows up
-        // exponentially) and fold the fixpoint detection INTO the
-        // materialization pass: an accumulator counts label changes
-        // while the rows persist, so each round runs ONE job, not a
-        // checkpoint job plus a count job (r6: the extra per-round
-        // action was ~40% of loop wall time at sample scale). Task
-        // retries can only OVERcount the accumulator; the loop exits
-        // on exactly zero, which retries cannot fabricate, so the
-        // detection stays sound on a real cluster. Rebuilding the next
-        // frame as a fresh LogicalRDD also resets the ESTIMATED
-        // statistics each round — localCheckpoint preserved the origin
-        // plan's sizeInBytes, which compounds multiplicatively round
-        // over round (^2 per round; the optimizer visibly spun
-        // multiplying million-bit BigIntegers in
-        // BigInteger.multiplyToomCook3 with a double jump).
-        val acc = s.sparkContext.longAccumulator
-        val ckRdd = m1.join(j, m1("lab") === j("jn"))
-          .select(m1("n"), m1("old"), col("jlab").as("lab"))
-          .rdd.map { r =>
-            if (r.get(1) != r.get(2)) acc.add(1L)
-            r
-          }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ckRdd.count()
-        changed = acc.value
-        val next = s.createDataFrame(
-          ckRdd.map(r => org.apache.spark.sql.Row(r.get(0), r.get(2))),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("n",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("lab",
-              org.apache.spark.sql.types.LongType))))
-        unpersistPrev()
-        unpersistPrev = () => { ckRdd.unpersist(); () }
-        labels = next
-        iter += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[components] round=$iter changed=$changed" +
-            f" t=${(System.nanoTime() - tLoop0) / 1e9}%.2f")
-      }
-      edges.unpersist()
-      // NOTE: the final round's persisted RDD stays cached — the
-      // returned frame reads it; it is sample-sized and released when
-      // the session GCs the RDD.
-      labels
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
-
-  /** A/B alternative (r7, VERDICT #3): alternating large-star /
-    * small-star contraction — the Kiveris et al. (SOCC'14) MapReduce
-    * CC formulation, the one classic variant not yet tried against
-    * the label-propagation loop (double-jump and step-batching are
-    * recorded negatives above). State is the EDGE set, not a label
-    * per node: large-star hangs every larger neighbor of u off
-    * min(Γ(u) ∪ {u}); small-star re-hangs the smaller neighborhood;
-    * at the joint fixpoint every component is a star centered at its
-    * min node. Same materialize-per-step LogicalRDD pattern as the
-    * label loop (each star op references the prior edge frame up to
-    * 4×, so lineage would double per step and re-plan exponentially).
-    * Convergence = (count, bit_xor(xxhash64(u,v))) stable across a
-    * full round, computed as one tiny agg job on the step's persisted RDD
-    * (deterministic — no accumulator, so retry-safe on a cluster).
-    * Selected via GRAFT_CC_ALGO=star; see the A/B verdict comment at
-    * the dispatch site in [[components]]. */
-  private[graft] def componentsStar(verts: DataFrame, pairs: DataFrame): DataFrame = {
-    val s = verts.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema2 = StructType(Seq(
-      StructField("u", LongType), StructField("v", LongType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val nNodes = verts.count()
-      val parts = math.min(2048L, math.max(2L, nNodes / 500000L + 1L))
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-
-      // one materialization per star step: persist, truncate lineage,
-      // and return (frame, count, hashsum, release)
-      def materialize(e: DataFrame): (DataFrame, Long, Long, () => Unit) = {
-        val rdd = e.rdd.map(r => Row(r.getLong(0), r.getLong(1)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        val fresh = s.createDataFrame(rdd, schema2)
-        // bit_xor, not sum: ANSI mode makes a long sum of 2^63-range
-        // hashes throw on overflow, and xor is an equally valid set
-        // fingerprint over the distinct edge set
-        val agg = fresh.select(count(lit(1)),
-          expr("bit_xor(xxhash64(u, v))")).collect()(0)
-        (fresh, agg.getLong(0), Option(agg.get(1)).fold(0L)(_ => agg.getLong(1)),
-          () => { rdd.unpersist(); () })
-      }
-
-      def largeStar(e: DataFrame): DataFrame = {
-        val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-        val m = sym.groupBy("u").agg(min(col("v")).as("mv"))
-          .select(col("u").as("mu"), least(col("u"), col("mv")).as("m"))
-        sym.join(m, sym("u") === col("mu"))
-          .where(sym("v") > sym("u"))
-          .select(sym("v").as("u"), col("m").as("v"))
-          .where(col("u") =!= col("v"))
-          .distinct()
-      }
-      def smallStar(e: DataFrame): DataFrame = {
-        // edges already arrive u > v (both ops emit larger→smaller)
-        val m = e.groupBy("u").agg(min(col("v")).as("m"))
-        e.join(m, "u")
-          .select(e("v").as("u"), col("m").as("v"))
-          .union(m.select(col("u"), col("m").as("v")))
-          .where(col("u") =!= col("v"))
-          .distinct()
-      }
-
-      var (edges, cnt, hsum, release) = materialize(
-        pairs.select(greatest(col("a"), col("b")).as("u"),
-            least(col("a"), col("b")).as("v"))
-          .where(col("u") =!= col("v")).distinct())
-      var stable = false
-      var iter = 0
-      while (!stable && iter < 16) {
-        val (e1, _, _, rel1) = materialize(largeStar(edges))
-        val (e2, c2, h2, rel2) = materialize(smallStar(e1))
-        release(); rel1()
-        stable = c2 == cnt && h2 == hsum
-        edges = e2; cnt = c2; hsum = h2; release = rel2
-        iter += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[componentsStar] round=$iter n_edges=$cnt")
-      }
-      // stars: every non-center node has exactly one edge to its
-      // component min; centers and isolated nodes label themselves
-      val lab = edges.groupBy("u").agg(min(col("v")).as("clab"))
-      verts.join(lab, verts("n") === lab("u"), "left")
-        .select(verts("n"), coalesce(col("clab"), verts("n")).as("lab"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   val queries: Map[String, Q] = Map(

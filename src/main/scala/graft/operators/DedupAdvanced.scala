@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** Near-duplicate detection for a training-data pipeline — the
   * operators a 100 TB LLM-data curation job runs on top of the exact
@@ -183,12 +183,8 @@ object DedupAdvanced {
     * SAFE ONLY because each call site materializes its result inside
     * the scope (eager localCheckpoint) — a lazily-returned frame
     * would execute under the RESTORED conf. */
-  private def withShuffle8[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "8")
-    try f finally s.conf.set(key, prev)
-  }
+  private def withShuffle8[T](s: SparkSession)(f: => T): T =
+    SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "8")(f)
 
   /** Distinct band-collision candidate pairs (da < db) from a
     * signature frame — never all-pairs. */
@@ -569,7 +565,7 @@ object DedupAdvanced {
       val labels = Clustering.components(
         docs.select(col("doc_id").as("n")), verified)
       // components() materialized the verified pair list eagerly (its
-      // star loop persists + counts), so the shingle synopsis has no
+      // edge RDD persists + counts), so the shingle synopsis has no
       // unexecuted consumer left (r15 #5); the returned census reads
       // docs + the CC label frame only
       graft.Ckpt.free(shing)

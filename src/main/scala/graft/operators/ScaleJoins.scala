@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** Scale-technique joins — the two patterns a 100 TB job reaches for
   * when a plain shuffle join stops working, each declared as an
@@ -52,19 +52,12 @@ object ScaleJoins {
     * restoring every conf afterwards. The sandbox-scale thresholds
     * (application side ≥ 0 bytes) stand in for the 10 GB default a
     * real cluster keeps; at 100 TB the defaults fire on their own. */
-  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T = {
-    val want = Seq(
+  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T =
+    SessionScope.withConf(s)(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    val saved = want.map { case (k, _) => k -> s.conf.getOption(k) }
-    want.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")(body)
 
   /** The inner plan of `join_skew_aqe`: a deliberately hot-keyed fact
     * (95 % of lineitem rows mapped onto join key 1) ⋈ the full orders
@@ -99,21 +92,14 @@ object ScaleJoins {
     * broadcast disabled on BOTH planner and AQE thresholds (the skew
     * splitter only rewrites sort-merge joins). Every conf restored
     * afterwards — the withBloomConfs contract. */
-  private[graft] def withSkewConfs[T](s: SparkSession)(body: => T): T = {
-    val want = Seq(
+  private[graft] def withSkewConfs[T](s: SparkSession)(body: => T): T =
+    SessionScope.withConf(s)(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")
-    val saved = want.map { case (k, _) => k -> s.conf.getOption(k) }
-    want.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")(body)
 
   val queries: Map[String, Q] = Map(
     // AQE skew-join split (r12, VERDICT r11 #3) — the RUNTIME

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** Similarity search, multimodal columns, and the custom-function
   * surface (SURVEY.md §2.10 — north-star components).
@@ -181,9 +181,7 @@ object Similarity {
       // partial aggregation reduces to ≤1024 rows before the exchange);
       // the conf is restored before the returned plan is built, so the
       // probe query still runs at the session setting.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "4") {
         for (_ <- 1 to 2) {
           val means = assign(cents)
             .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -196,7 +194,7 @@ object Similarity {
             (cid, Seq.tabulate(dim)(j => means.getOrElse((cid, j), old(j))))
           }
         }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       val assigned = assign(cents).withColumnRenamed("cid", "cell")
       val cdf = cents.toDF("cid", "cv")
       val probes = emb.filter(col("vec_id") < 5)
@@ -379,17 +377,16 @@ object Similarity {
       // ≤ labels×dims groups — 4 partitions bound the fit shuffle
       // regardless of corpus size (the sim_ivf_ann lesson: 32
       // near-empty tasks cost more than the data)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       val centRows =
-        try emb
-          .select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
-          .groupBy("label", "i")
-          .agg((sum(col("x").cast("decimal(18,12)")).cast("double")
-            / count(lit(1))).as("c"))
-          .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2)))
-          .toMap
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "4") {
+          emb
+            .select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
+            .groupBy("label", "i")
+            .agg((sum(col("x").cast("decimal(18,12)")).cast("double")
+              / count(lit(1))).as("c"))
+            .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2)))
+            .toMap
+        }
       val labels = centRows.keys.map(_._1).toSeq.distinct.sorted
       val centArr = array(labels.map(l =>
         array((0 until 64).map(i => lit(centRows((l, i)))): _*)): _*)

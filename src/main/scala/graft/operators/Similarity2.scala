@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** Round-8 similarity/curation extensions: embedding-cluster semantic
   * dedup (the SemDeDup recipe: Abbas et al. 2023, arXiv:2303.09540)
@@ -93,9 +93,7 @@ object Similarity2 {
     // Lloyd rounds: ≤ M·K·SD = 64·K groups per round — bound the fit
     // shuffle to 4 partitions regardless of corpus size (map-side
     // partials reduce before the exchange), as in sim_ivf_ann
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "4") {
       for (_ <- 0 until rounds) {
         val means = codesOf(cb)
           .select(col("sub"), col("cid"),
@@ -110,7 +108,7 @@ object Similarity2 {
         cb = Seq.tabulate(M)(sm => Seq.tabulate(K)(c => Seq.tabulate(SD)(j =>
           means.getOrElse((sm, c, j), cb(sm)(c)(j)))))
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val codes = codesOf(cb).select("vec_id", "sub", "cid")
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), posexplode(expr(
@@ -424,9 +422,7 @@ object Similarity2 {
       .withColumn("codes", call_function("pq_codes", col("r"), cbLit(c)))
       .select(col("vec_id"), col("cell"), col("r"),
         posexplode(col("codes")).as(Seq("sub", "cid")))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "4") {
       val means = codesOf(cb)
         .select(col("sub"), col("cid"),
           posexplode(expr(s"slice(r, sub*$SD + 1, $SD)"))
@@ -439,7 +435,7 @@ object Similarity2 {
           r.getDouble(3))).toMap
       cb = Seq.tabulate(M)(sm => Seq.tabulate(K)(c => Seq.tabulate(SD)(j =>
         means.getOrElse((sm, c, j), cb(sm)(c)(j)))))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val codes = codesOf(cb).select("vec_id", "cell", "sub", "cid")
     // probe batch: top-NPROBE cells per query by coarse distance, then
     // a PER-PROBED-CELL query residual → |Q|·NPROBE·M·K distance table

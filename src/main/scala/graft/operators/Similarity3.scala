@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Ckpt, Tables}
+import graft.{Ckpt, SessionScope, Tables}
 
 /** Graph-based ANN (r12, VERDICT r11 #1) — the FOURTH ANN family
   * beside sign-LSH (`sim_lsh_ann`), IVF (`sim_ivf_ann`), and
@@ -108,11 +108,8 @@ object Similarity3 {
     * coalescing are doing real work in the seed/descent joins, whose
     * sides are only broadcastable at fixture scale). Rejected: AQE
     * stays ON — scale-adaptive at fixture AND cluster scale. */
-  private def withFewPartitions[A](s: SparkSession)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withFewPartitions[A](s: SparkSession)(body: => A): A =
+    SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "4")(body)
 
   /** Re-rank candidate pairs (a, b) to each a's top-M by cosine,
     * scoring against `e` (vec_id, embedding); keeps `cos`. Accepts a

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SessionScope.{withConf, withViews}
 import graft.Tables
 
 /** Subquery and reshaping operators (round-3 extensions): scalar
@@ -31,37 +32,37 @@ object Subqueries {
     // string is shared VERBATIM with the oracle (table names match
     // the fixture views) — parity by construction, and Catalyst's
     // join reorder/pushdown applies to text exactly as to DataFrames.
-    "sql_text_star_revenue" -> ((s, d) => {
-      Tables.region(s, d).createOrReplaceTempView("region")
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(sqlTextStarRevenue)
-    }),
+    "sql_text_star_revenue" -> ((s, d) =>
+      withViews(s)("region" -> Tables.region(s, d),
+          "nation" -> Tables.nation(s, d),
+          "customer" -> Tables.customer(s, d),
+          "orders" -> Tables.orders(s, d),
+          "lineitem" -> Tables.lineitem(s, d)) {
+        s.sql(sqlTextStarRevenue)
+      }),
 
     // Orders above the global average price — scalar subquery.
-    "subquery_scalar_agg" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("graft_orders_v")
-      s.sql(
-        """SELECT o_orderstatus, count(*) AS n
-          |FROM graft_orders_v
-          |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM graft_orders_v)
-          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
+    "subquery_scalar_agg" -> ((s, d) =>
+      withViews(s)("graft_orders_v" -> Tables.orders(s, d)) {
+        s.sql(
+          """SELECT o_orderstatus, count(*) AS n
+            |FROM graft_orders_v
+            |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM graft_orders_v)
+            |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+      }),
 
     // Customers with ≥1 large order — correlated EXISTS.
-    "subquery_correlated_exists" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("graft_orders_v")
-      Tables.customer(s, d).createOrReplaceTempView("graft_customer_v")
-      s.sql(
-        """SELECT c_mktsegment, count(*) AS n
-          |FROM graft_customer_v c
-          |WHERE EXISTS (SELECT 1 FROM graft_orders_v o
-          |              WHERE o.o_custkey = c.c_custkey
-          |                AND o.o_totalprice > 300000)
-          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-    }),
+    "subquery_correlated_exists" -> ((s, d) =>
+      withViews(s)("graft_orders_v" -> Tables.orders(s, d),
+          "graft_customer_v" -> Tables.customer(s, d)) {
+        s.sql(
+          """SELECT c_mktsegment, count(*) AS n
+            |FROM graft_customer_v c
+            |WHERE EXISTS (SELECT 1 FROM graft_orders_v o
+            |              WHERE o.o_custkey = c.c_custkey
+            |                AND o.o_totalprice > 300000)
+            |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      }),
 
     // Quantified comparisons (r12) — the ANY/ALL member completing
     // the subquery family (scalar / EXISTS / IN / LATERAL / ANY-ALL).
@@ -77,21 +78,21 @@ object Subqueries {
     // subqueries reduce to 1-row aggregates broadcast to the scan —
     // the only shape a quantifier over an sf-scaling subquery may
     // take at 100 TB (never a per-row probe).
-    "subquery_any_all" -> ((s, d) => {
-      Tables.part(s, d).createOrReplaceTempView("graft_part_v")
-      s.sql(
-        """SELECT p_brand, count(*) AS n,
-          |       round(CAST(sum(CAST(p_retailprice AS DECIMAL(18,2)))
-          |             AS DOUBLE), 4) AS total
-          |FROM graft_part_v
-          |WHERE p_retailprice > (SELECT max(p_retailprice / 2)
-          |                       FROM graft_part_v
-          |                       WHERE p_partkey % 100 = 0)
-          |  AND p_retailprice < (SELECT max(p_retailprice)
-          |                       FROM graft_part_v
-          |                       WHERE p_partkey % 50 = 0)
-          |GROUP BY p_brand ORDER BY p_brand""".stripMargin)
-    }),
+    "subquery_any_all" -> ((s, d) =>
+      withViews(s)("graft_part_v" -> Tables.part(s, d)) {
+        s.sql(
+          """SELECT p_brand, count(*) AS n,
+            |       round(CAST(sum(CAST(p_retailprice AS DECIMAL(18,2)))
+            |             AS DOUBLE), 4) AS total
+            |FROM graft_part_v
+            |WHERE p_retailprice > (SELECT max(p_retailprice / 2)
+            |                       FROM graft_part_v
+            |                       WHERE p_partkey % 100 = 0)
+            |  AND p_retailprice < (SELECT max(p_retailprice)
+            |                       FROM graft_part_v
+            |                       WHERE p_partkey % 50 = 0)
+            |GROUP BY p_brand ORDER BY p_brand""".stripMargin)
+      }),
 
     // SQL scripting (r12) — Spark 4's procedural SQL surface
     // (BEGIN/DECLARE/SET/WHILE, spark.sql.scripting.enabled): an
@@ -122,30 +123,26 @@ object Subqueries {
       // exactly the synopsis you'd pin before a driver-side loop.
       val ordv = Tables.orders(s, d).select(col("o_totalprice"))
         .localCheckpoint(true)
-      ordv.createOrReplaceTempView("graft_orders_v")
-      val prev = s.conf.getOption("spark.sql.scripting.enabled")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      try {
-        val res = s.sql(
-          """BEGIN
-            |  DECLARE k INT DEFAULT 0;
-            |  DECLARE n BIGINT DEFAULT 0;
-            |  SET n = (SELECT count(*) FROM graft_orders_v);
-            |  WHILE n >= 1000 AND k < 40 DO
-            |    SET k = k + 1;
-            |    SET n = (SELECT count(*) FROM graft_orders_v
-            |             WHERE o_totalprice > power(2.0, k));
-            |  END WHILE;
-            |  SELECT k, CAST(power(2.0, k) AS DOUBLE) AS threshold,
-            |         n AS n_above;
-            |END""".stripMargin).localCheckpoint(true)
-        // the ~19 probe scans all ran inside the eager checkpoint
-        // above; the one-column view block is dead from here (r15 #5)
-        graft.Ckpt.free(ordv)
-        res
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-        case None => s.conf.unset("spark.sql.scripting.enabled")
+      withViews(s)("graft_orders_v" -> ordv) {
+        withConf(s)("spark.sql.scripting.enabled" -> "true") {
+          val res = s.sql(
+            """BEGIN
+              |  DECLARE k INT DEFAULT 0;
+              |  DECLARE n BIGINT DEFAULT 0;
+              |  SET n = (SELECT count(*) FROM graft_orders_v);
+              |  WHILE n >= 1000 AND k < 40 DO
+              |    SET k = k + 1;
+              |    SET n = (SELECT count(*) FROM graft_orders_v
+              |             WHERE o_totalprice > power(2.0, k));
+              |  END WHILE;
+              |  SELECT k, CAST(power(2.0, k) AS DOUBLE) AS threshold,
+              |         n AS n_above;
+              |END""".stripMargin).localCheckpoint(true)
+          // the ~19 probe scans all ran inside the eager checkpoint
+          // above; the one-column view block is dead from here (r15 #5)
+          graft.Ckpt.free(ordv)
+          res
+        }
       }
     }),
 
@@ -159,20 +156,20 @@ object Subqueries {
     // costs nothing at 100 TB. Oracle = the classic ANSI text (DuckDB
     // has no pipe syntax) — cross-syntax evidence, the
     // subquery_any_all precedent in reverse.
-    "sql_pipe_syntax" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """FROM lineitem
-          ||> WHERE l_quantity > 5
-          ||> EXTEND l_extendedprice * (1 - l_discount) AS disc_price
-          ||> AGGREGATE count(*) AS n,
-          |     round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-          |       AS DOUBLE), 2) AS sum_qty,
-          |     round(CAST(sum(CAST(disc_price AS DECIMAL(18,4)))
-          |       AS DOUBLE), 4) AS revenue
-          |   GROUP BY l_returnflag, l_linestatus
-          ||> ORDER BY l_returnflag, l_linestatus""".stripMargin)
-    }),
+    "sql_pipe_syntax" -> ((s, d) =>
+      withViews(s)("lineitem" -> Tables.lineitem(s, d)) {
+        s.sql(
+          """FROM lineitem
+            ||> WHERE l_quantity > 5
+            ||> EXTEND l_extendedprice * (1 - l_discount) AS disc_price
+            ||> AGGREGATE count(*) AS n,
+            |     round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
+            |       AS DOUBLE), 2) AS sum_qty,
+            |     round(CAST(sum(CAST(disc_price AS DECIMAL(18,4)))
+            |       AS DOUBLE), 4) AS revenue
+            |   GROUP BY l_returnflag, l_linestatus
+            ||> ORDER BY l_returnflag, l_linestatus""".stripMargin)
+      }),
 
     // SQL-body scalar UDFs (r13, VERDICT r12 #4) — CREATE FUNCTION
     // ... RETURNS ... RETURN <expr>, the declarative counterpart of
@@ -184,27 +181,27 @@ object Subqueries {
     // bodies exercise both shapes: an arithmetic expression feeding
     // an aggregate, and a CASE band used as a grouping key. Oracle:
     // the same expressions textually inlined in DuckDB.
-    "fn_sql_udf" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("graft_lineitem_v")
-      s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
-                 p DOUBLE, disc DOUBLE) RETURNS DOUBLE
-               RETURN p * (1 - disc)""")
-      s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_price_band(
-                 p DOUBLE) RETURNS STRING
-               RETURN CASE WHEN p < 20000 THEN 'low'
-                           WHEN p < 50000 THEN 'mid'
-                           ELSE 'high' END""")
-      s.sql(
-        """SELECT l_returnflag,
-                  graft_price_band(l_extendedprice) AS band,
-                  count(*) AS n,
-                  round(CAST(sum(CAST(graft_disc_price(l_extendedprice,
-                    l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4)
-                    AS revenue
-           FROM graft_lineitem_v
-           GROUP BY l_returnflag, graft_price_band(l_extendedprice)
-           ORDER BY l_returnflag, band""")
-    }),
+    "fn_sql_udf" -> ((s, d) =>
+      withViews(s)("graft_lineitem_v" -> Tables.lineitem(s, d)) {
+        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
+                   p DOUBLE, disc DOUBLE) RETURNS DOUBLE
+                 RETURN p * (1 - disc)""")
+        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_price_band(
+                   p DOUBLE) RETURNS STRING
+                 RETURN CASE WHEN p < 20000 THEN 'low'
+                             WHEN p < 50000 THEN 'mid'
+                             ELSE 'high' END""")
+        s.sql(
+          """SELECT l_returnflag,
+                    graft_price_band(l_extendedprice) AS band,
+                    count(*) AS n,
+                    round(CAST(sum(CAST(graft_disc_price(l_extendedprice,
+                      l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4)
+                      AS revenue
+             FROM graft_lineitem_v
+             GROUP BY l_returnflag, graft_price_band(l_extendedprice)
+             ORDER BY l_returnflag, band""")
+      }),
 
     // SQL-body TABLE function (r13) — CREATE FUNCTION ... RETURNS
     // TABLE, completing the SQL-UDF surface beside fn_sql_udf's
@@ -223,42 +220,42 @@ object Subqueries {
     // unnest([0..3]) frame — identical IEEE edge arithmetic in both
     // engines (never floor(p/width), whose division can round across
     // a band edge the comparisons don't).
-    "fn_sql_table_udf" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("graft_orders_v")
-      s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_bands(
-                 lo DOUBLE, hi DOUBLE, n INT)
-               RETURNS TABLE (band INT, blo DOUBLE, bhi DOUBLE)
-               RETURN SELECT band, lo + band * (hi - lo) / n AS blo,
-                             lo + (band + 1) * (hi - lo) / n AS bhi
-                      FROM (SELECT explode(sequence(0, n - 1)) AS band)""")
-      s.sql(
-        """SELECT o_orderstatus, b.band, count(*) AS n,
-                  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                    AS DOUBLE), 4) AS total
-           FROM graft_orders_v o,
-                LATERAL graft_bands(0.0, 600000.0, 4) b
-           WHERE o.o_totalprice >= b.blo AND o.o_totalprice < b.bhi
-           GROUP BY o_orderstatus, b.band
-           ORDER BY o_orderstatus, band""")
-    }),
+    "fn_sql_table_udf" -> ((s, d) =>
+      withViews(s)("graft_orders_v" -> Tables.orders(s, d)) {
+        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_bands(
+                   lo DOUBLE, hi DOUBLE, n INT)
+                 RETURNS TABLE (band INT, blo DOUBLE, bhi DOUBLE)
+                 RETURN SELECT band, lo + band * (hi - lo) / n AS blo,
+                               lo + (band + 1) * (hi - lo) / n AS bhi
+                        FROM (SELECT explode(sequence(0, n - 1)) AS band)""")
+        s.sql(
+          """SELECT o_orderstatus, b.band, count(*) AS n,
+                    round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                      AS DOUBLE), 4) AS total
+             FROM graft_orders_v o,
+                  LATERAL graft_bands(0.0, 600000.0, 4) b
+             WHERE o.o_totalprice >= b.blo AND o.o_totalprice < b.bhi
+             GROUP BY o_orderstatus, b.band
+             ORDER BY o_orderstatus, band""")
+      }),
 
     // Correlated LATERAL join (SQL-surface lateral subquery): a
     // per-order aggregate computed in the FROM clause. Catalyst
     // decorrelates it to an outer join against a grouped aggregate —
     // never a per-row re-execution, so it scales like a join.
-    "subquery_lateral" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("graft_orders_v")
-      Tables.lineitem(s, d).createOrReplaceTempView("graft_lineitem_v")
-      s.sql(
-        """SELECT o.o_orderkey, o.o_orderstatus, l.max_price, l.n_lines
-          |FROM graft_orders_v o,
-          |LATERAL (SELECT max(l_extendedprice) AS max_price,
-          |                count(*) AS n_lines
-          |         FROM graft_lineitem_v
-          |         WHERE l_orderkey = o.o_orderkey) l
-          |WHERE o.o_orderkey % 500 = 0
-          |ORDER BY o.o_orderkey""".stripMargin)
-    }),
+    "subquery_lateral" -> ((s, d) =>
+      withViews(s)("graft_orders_v" -> Tables.orders(s, d),
+          "graft_lineitem_v" -> Tables.lineitem(s, d)) {
+        s.sql(
+          """SELECT o.o_orderkey, o.o_orderstatus, l.max_price, l.n_lines
+            |FROM graft_orders_v o,
+            |LATERAL (SELECT max(l_extendedprice) AS max_price,
+            |                count(*) AS n_lines
+            |         FROM graft_lineitem_v
+            |         WHERE l_orderkey = o.o_orderkey) l
+            |WHERE o.o_orderkey % 500 = 0
+            |ORDER BY o.o_orderkey""".stripMargin)
+      }),
 
     // Error-safe (TRY) arithmetic: division by a zero-able divisor,
     // integer div, and try_cast of non-numeric strings all yield NULL
@@ -285,10 +282,10 @@ object Subqueries {
     // partitioned by the join key, so recursion depth, not data
     // volume, bounds the round count (same O(log n) shape as the CC
     // loop).
-    "sql_recursive_cte" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      s.sql(sqlRecursiveCte)
-    }),
+    "sql_recursive_cte" -> ((s, d) =>
+      withViews(s)("customer" -> Tables.customer(s, d)) {
+        s.sql(sqlRecursiveCte)
+      }),
 
     // Wide reshape: order counts by status × a fixed priority list.
     "pivot_wide" -> ((s, d) =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** The staging pipeline surface (SURVEY.md §2.1) — the reference's
   * identity: multi-format ingest with declared schemas, corrupt-record
@@ -33,9 +33,12 @@ object Staging {
 
   /** Resolved scratch path for a purpose — the single source of the
     * layout (tests read it instead of re-spelling paths); does NOT
-    * create or clean anything. */
+    * create or clean anything. Rooted under `java.io.tmpdir`, so runs
+    * with different tmpdirs never share (or pre-clean) each other's
+    * directories. */
   private[graft] def scratchPath(prefix: String): String =
-    java.nio.file.Paths.get("/tmp/graft_scratch", prefix).toString
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_scratch", prefix).toString
 
   /** Fixed scratch path per purpose, pre-cleaned on reuse: repeated
     * Bench/Verify runs overwrite the same directories instead of
@@ -91,15 +94,13 @@ object Staging {
     "stage_idempotent_rewrite" -> ((s, d) => {
       val out = tmpDir("idempotent_stage")
       val ev = Tables.events(s, d).withColumn("day", to_date(col("ts")))
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(key, "STATIC")
-      s.conf.set(key, "dynamic")
-      try {
+      SessionScope.withConf(s)(
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         ev.write.mode("overwrite").partitionBy("day").parquet(out)
         val day0 = ev.select(min(col("day"))).collect()(0).getDate(0)
         ev.filter(col("day") === lit(day0)) // the re-delivered batch
           .write.mode("overwrite").partitionBy("day").parquet(out)
-      } finally s.conf.set(key, prev)
+      }
       s.read.parquet(out).groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           round(sum(col("value").cast("decimal(18,2)")).cast("double"), 4)
@@ -181,15 +182,11 @@ object Staging {
       val o = Tables.orders(s, d)
         .withColumn("yr", year(col("o_orderdate")))
       o.write.mode("overwrite").partitionBy("yr").parquet(out)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try o.filter(col("yr") % 2 === 0
-          && col("o_orderpriority") === "1-URGENT")
-        .write.mode("overwrite").partitionBy("yr").parquet(out)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
+      SessionScope.withConf(s)(
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        o.filter(col("yr") % 2 === 0
+            && col("o_orderpriority") === "1-URGENT")
+          .write.mode("overwrite").partitionBy("yr").parquet(out)
       }
       s.read.parquet(out)
         .groupBy("yr")
@@ -691,8 +688,9 @@ object Staging {
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.table(name)
-        .select(col("l_returnflag"), col("count").as("n"))
+      val sink = s.table(name)
+      s.catalog.dropTempView(name)
+      sink.select(col("l_returnflag"), col("count").as("n"))
         .orderBy("l_returnflag")
     }),
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import graft.Tables
+import graft.{SessionScope, Tables}
 
 /** Structured-Streaming operators (SURVEY.md §2.9).
   *
@@ -34,12 +34,10 @@ object Streaming {
 
   private val sinkId = new AtomicInteger(0)
 
-  /** Streaming read of the events fixture. The physical `ts` encoding
-    * has varied across fixture generations (INT64-nanos vs
-    * timestamp[us]); Tables.normalizeEventsTs is the single place that
-    * maps either onto `ts: TimestampType`. */
+  /** Streaming read of the events fixture, with `ts` mapped onto
+    * `TimestampType` by Tables.normalizeEventsTs as the batch loader
+    * does. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$d/events.parquet"
     val schema = s.read.parquet(path).schema
     // FileStreamSource requires a directory or glob, not a bare file
@@ -66,22 +64,22 @@ object Streaming {
     * sized to state volume (state rows / partition ≈ store block), not
     * to core count. Restored after the stream drains so batch queries
     * keep the session default. */
-  private def withStreamShuffle[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "8")
-    try f finally s.conf.set(key, prev)
-  }
+  private def withStreamShuffle[T](s: SparkSession)(f: => T): T =
+    SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "8")(f)
 
   /** Drain a streaming DataFrame into a memory sink and return the
-    * sink contents as a batch DataFrame. */
+    * sink contents as a batch DataFrame. The sink's temp view is
+    * dropped once the frame has resolved it: the frame keeps the
+    * sink's rows, the session keeps no name for them. */
   private def drain(sdf: DataFrame, mode: String): DataFrame =
     withStreamShuffle(sdf.sparkSession) {
       val name = "graft_sink_" + sinkId.incrementAndGet()
       val q = sdf.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      sdf.sparkSession.table(name)
+      val out = sdf.sparkSession.table(name)
+      sdf.sparkSession.catalog.dropTempView(name)
+      out
     }
 
   /** Watermarked (views, purchases) stream pair + the shared 1-hour
@@ -131,12 +129,9 @@ object Streaming {
     // RocksDB-backed ValueState (mapGroupsWithState's successor —
     // typed state cells, TTL support, timers). Update-mode drain +
     // final max per key = the end state; batch SQL is the oracle.
-    "stream_transform_with_state" -> ((s, d) => {
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+    "stream_transform_with_state" -> ((s, d) =>
+      SessionScope.withConf(s)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         import s.implicits._
         val ds = eventsStream(s, d)
           .select(col("user_id"), unix_micros(col("ts")).as("us"))
@@ -150,11 +145,7 @@ object Streaming {
           .groupBy("user_id")
           .agg(max(col("n")).as("n"), max(col("last_us")).as("last_us"))
           .orderBy("user_id")
-      } finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-    }),
+      }),
 
     // Streaming RAG ingest (r9): the chunk stage of
     // pipeline_chunk_embed_e2e as a STREAM — documents arrive as

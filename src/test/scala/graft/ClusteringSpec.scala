@@ -47,26 +47,6 @@ class ClusteringSpec extends GraftSuite {
       s"components differ: got=${got.toSeq.sorted} expected=${expected.toSeq.sorted}")
   }
 
-  test("componentsStar (large-star/small-star A/B) equals label propagation") {
-    // the GRAFT_CC_ALGO=star alternative (a documented local-perf
-    // negative, kept for edge-heavy graphs) must stay label-identical
-    // to the default loop — this pins it against rot
-    graft.functions.GraftFunctions.register(spark)
-    val sample = Tables.embeddings(spark, sf)
-      .filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("embedding"))
-    val verts = sample.select(col("vec_id").as("n"))
-    val pairs = graft.operators.MirroredLsh.candidates(sample)
-      .filter(col("cos") >= 0.3)
-      .select(col("a"), col("b"))
-    val viaStar = Clustering.componentsStar(verts, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = Clustering.components(verts, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar == viaProp,
-      s"star and label-prop disagree on ${viaStar.toSet.diff(viaProp.toSet).take(5)}")
-  }
-
   test("dedup_cluster_cc covers every sampled node exactly once") {
     val rows = Clustering.queries("dedup_cluster_cc")(spark, sf).collect()
     val nodes = Tables.embeddings(spark, sf)

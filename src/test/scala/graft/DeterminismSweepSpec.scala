@@ -30,7 +30,6 @@ class DeterminismSweepSpec extends GraftSuite {
     name.startsWith("stream_") || name == "source_streaming_files"
 
   test("float-output keys are invariant to partition layout (values + order)") {
-    val conf = spark.conf
     val allKeys = SparkEntry.queries.keys.filterNot(isStreaming).toSeq.sorted
     // The float filter runs INSIDE the first layout pass (schema read off
     // the same DataFrame object) — a separate schema-discovery pass would
@@ -39,19 +38,15 @@ class DeterminismSweepSpec extends GraftSuite {
     // staging writes), doubling the heaviest keys' cost (ADVICE r5).
     def runAll(parts: String, maxBytes: String,
                subset: Option[Seq[String]]): Map[String, Seq[String]] = {
-      val prevP = conf.get("spark.sql.shuffle.partitions")
-      val prevB = conf.get("spark.sql.files.maxPartitionBytes")
-      conf.set("spark.sql.shuffle.partitions", parts)
-      conf.set("spark.sql.files.maxPartitionBytes", maxBytes)
-      try subset.getOrElse(allKeys).flatMap { k =>
-        val df = SparkEntry.queries(k)(spark, sf)
-        if (hasFloat(df.schema))
-          Some(k -> df.collect().toSeq.map(_.toString))
-        else None
-      }.toMap
-      finally {
-        conf.set("spark.sql.shuffle.partitions", prevP)
-        conf.set("spark.sql.files.maxPartitionBytes", prevB)
+      SessionScope.withConf(spark)(
+          "spark.sql.shuffle.partitions" -> parts,
+          "spark.sql.files.maxPartitionBytes" -> maxBytes) {
+        subset.getOrElse(allKeys).flatMap { k =>
+          val df = SparkEntry.queries(k)(spark, sf)
+          if (hasFloat(df.schema))
+            Some(k -> df.collect().toSeq.map(_.toString))
+          else None
+        }.toMap
       }
     }
     val wide = runAll("3", "134217728", None)  // few fat partitions

@@ -756,9 +756,25 @@ class PlanShapeSpec extends GraftSuite {
     // disagree about what is exempt
     val exempt: Map[String, String] = WindowAudit.exemptions
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    // The same pass checks that every key is hermetic: constructing it
+    // leaves the session's SQL conf and temp views exactly as it found
+    // them (SessionScope), so no key can change what a later key sees.
+    def views(): Set[String] = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val residue = Seq.newBuilder[String]
     val flagged = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (k, fn) =>
+        val (conf0, views0) = (spark.conf.getAll, views())
         val df = fn(spark, sf)
+        val (conf1, views1) = (spark.conf.getAll, views())
+        val confDiff = (conf0.keySet ++ conf1.keySet).toSeq.sorted
+          .filter(c => conf0.get(c) != conf1.get(c))
+          .map(c => s"$c: ${conf0.getOrElse(c, "<unset>")} -> " +
+            conf1.getOrElse(c, "<unset>"))
+        val viewDiff = (views1 -- views0).toSeq.sorted.map("+view " + _) ++
+          (views0 -- views1).toSeq.sorted.map("-view " + _)
+        if (confDiff.nonEmpty || viewDiff.nonEmpty)
+          residue += s"$k: ${(confDiff ++ viewDiff).mkString(", ")}"
         val n = df.queryExecution.optimizedPlan.collect {
           case w: LWindow
             if w.partitionSpec.isEmpty ||
@@ -766,6 +782,10 @@ class PlanShapeSpec extends GraftSuite {
         }.size
         if (n > 0) Some(k) else None
     }.toSet
+    val leaks = residue.result()
+    assert(leaks.isEmpty,
+      s"${leaks.size} key(s) left session state behind:\n" +
+        leaks.mkString("\n"))
     assert((flagged -- exempt.keySet).isEmpty,
       s"keys with a NEW global window and no exemption (use " +
         s"ScaleRank.withGlobalRank/withGlobalCumsum, a 1-row broadcast " +

@@ -12,7 +12,7 @@ class Round12Spec extends GraftSuite {
     val got = SparkEntry.queries("scan_xml_roundtrip")(spark, sf)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     // the part files are actual XML documents with the declared tags
-    val dir = new java.io.File("/tmp/graft_scratch/graft_xml_")
+    val dir = new java.io.File(graft.sources.Staging.scratchPath("graft_xml_"))
     val parts = dir.listFiles().filter(_.getName.startsWith("part-"))
     assert(parts.nonEmpty)
     assert(parts.forall(_.getName.endsWith(".xml")),
@@ -295,7 +295,7 @@ class Round12Spec extends GraftSuite {
           s"min=$riMin max=$riMax sum=$riSum)")
     }
     // layout: exactly one parquet part per segment directory
-    val root = new java.io.File("/tmp/graft_scratch/graft_lineage_")
+    val root = new java.io.File(graft.sources.Staging.scratchPath("graft_lineage_"))
     val segDirs = root.listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("c_mktsegment="))
     assert(segDirs.length == 5)

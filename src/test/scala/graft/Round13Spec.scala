@@ -13,8 +13,11 @@ class Round13Spec extends GraftSuite {
   test("sql_pipe_syntax: the |> chain desugars onto the classic " +
       "query's optimized plan (sameResult) and returns identical rows") {
     val pipe = SparkEntry.queries("sql_pipe_syntax")(spark, sf)
-    // view registered by the key; the classic text is the oracle's
-    val classic = spark.sql(graft.operators.Subqueries.sqlPipeClassic)
+    // the key drops its view on exit; the classic text is the oracle's
+    val classic = SessionScope.withViews(spark)(
+        "lineitem" -> Tables.lineitem(spark, sf)) {
+      spark.sql(graft.operators.Subqueries.sqlPipeClassic)
+    }
     assert(pipe.queryExecution.optimizedPlan
       .sameResult(classic.queryExecution.optimizedPlan),
       "pipe chain did not desugar onto the classic plan:\n" +

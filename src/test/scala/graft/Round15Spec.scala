@@ -94,8 +94,7 @@ class Round15Spec extends GraftSuite {
       (1L, 12L, "purchase", 51 * H),
       (2L, 21L, "view", 12 * H),
       (2L, 22L, "purchase", 13 * H)), 1060000L)
-    spark.conf.set("graft.stream.maxFilesPerTrigger", "1")
-    try {
+    SessionScope.withConf(spark)("graft.stream.maxFilesPerTrigger" -> "1") {
       val r = Streaming.queries("stream_pattern_funnel")(spark, dir)
         .collect()(0)
       // batch event-time semantics: user 1's view precedes its signup
@@ -107,8 +106,6 @@ class Round15Spec extends GraftSuite {
           "of 2 means the out-of-order guard failed (negative-delta " +
           "deadline match); 0 means the guard over-suppressed")
       assert(r.getLong(3) == 1, s"expected exactly 1 purchase, got $r")
-    } finally {
-      spark.conf.unset("graft.stream.maxFilesPerTrigger")
     }
   }
 }

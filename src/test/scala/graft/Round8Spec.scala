@@ -17,12 +17,15 @@ import org.apache.spark.sql.types._
 class Round8Spec extends GraftSuite {
 
   test("events.ts raw encoding is one of the two known generations") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType
-    assert(raw == LongType || raw == TimestampNTZType || raw == TimestampType,
-      s"events.ts has a NEW physical encoding $raw — extend " +
-        "Tables.normalizeEventsTs (and re-check every oracle) before " +
-        "the next driver round")
+    // an INT64 TIMESTAMP(NANOS) column does not even read without a
+    // legacy flag: report that as a new encoding too, not as a bare
+    // parquet error
+    val raw = scala.util.Try(
+      spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType)
+    assert(raw.toOption.exists(t => t == TimestampNTZType || t == TimestampType),
+      s"events.ts has a NEW physical encoding " +
+        raw.fold(e => s"(unreadable: ${e.getMessage.take(200)})", _.toString) +
+        " — extend Tables.normalizeEventsTs and re-check every oracle")
   }
 
   test("Tables.events normalizes ts to TimestampType under either encoding") {
@@ -167,7 +170,6 @@ class Round8Spec extends GraftSuite {
       "embeddings" -> Seq("vec_id", "embedding", "label"),
       "events" -> Seq("event_id", "ts", "user_id", "event_type", "value", "props"),
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     expected.foreach { case (t, cols) =>
       val got = spark.read.parquet(s"$sf/$t.parquet").columns.toSeq
       assert(got == cols, s"fixture $t columns drifted: $got")

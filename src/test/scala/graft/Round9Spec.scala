@@ -14,7 +14,7 @@ class Round9Spec extends GraftSuite {
     // written key must test positive, a key far outside the fixture
     // range should (with bloom-fp probability ~0) test negative.
     SparkEntry.queries("sink_parquet_bloom_filter")(spark, sf).collect()
-    val dir = new java.io.File("/tmp/graft_scratch/graft_bloom_")
+    val dir = new java.io.File(graft.sources.Staging.scratchPath("graft_bloom_"))
     val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).head
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -46,7 +46,7 @@ class Round9Spec extends GraftSuite {
 
   test("scan_jsonl_gzip_roundtrip: sink writes real .json.gz files") {
     SparkEntry.queries("scan_jsonl_gzip_roundtrip")(spark, sf).collect()
-    val dir = new java.io.File("/tmp/graft_scratch/graft_jsonl_gz_")
+    val dir = new java.io.File(graft.sources.Staging.scratchPath("graft_jsonl_gz_"))
     val parts = dir.listFiles().filter(_.getName.startsWith("part-"))
     assert(parts.nonEmpty)
     assert(parts.forall(_.getName.endsWith(".json.gz")),
@@ -133,7 +133,7 @@ class Round9Spec extends GraftSuite {
   test("sink_csv_quoted_roundtrip: written parts really contain " +
     "escaped quotes and embedded newlines") {
     SparkEntry.queries("sink_csv_quoted_roundtrip")(spark, sf).collect()
-    val dir = new java.io.File("/tmp/graft_scratch/graft_csv_q_")
+    val dir = new java.io.File(graft.sources.Staging.scratchPath("graft_csv_q_"))
     val part = dir.listFiles().filter(_.getName.endsWith(".csv")).head
     val raw = new String(
       java.nio.file.Files.readAllBytes(part.toPath), "UTF-8")

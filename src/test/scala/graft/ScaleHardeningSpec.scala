@@ -27,19 +27,8 @@ import graft.operators.Lifecycle
   */
 class ScaleHardeningSpec extends GraftSuite {
 
-  private def withConfs(kv: (String, String)*)(body: => Unit): Unit = {
-    val conf = spark.conf
-    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
-    kv.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
-
   test("AQE splits a manufactured skewed partition in the executed plan") {
-    withConfs(
+    SessionScope.withConf(spark)(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",

@@ -69,9 +69,9 @@ class TopOneToMinStructSpec extends GraftSuite {
   }
 
   test("kill switch disables the rewrite without uninstalling") {
-    opt.conf.set(TopOneToMinStruct.EnabledKey, "false")
-    try assert(hasWindow(top1(opt)), "disabled rule must leave the window")
-    finally opt.conf.unset(TopOneToMinStruct.EnabledKey)
+    SessionScope.withConf(opt)(TopOneToMinStruct.EnabledKey -> "false") {
+      assert(hasWindow(top1(opt)), "disabled rule must leave the window")
+    }
     assert(!hasWindow(top1(opt)), "re-enabled after unset")
   }
 
