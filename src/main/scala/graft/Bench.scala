@@ -15,16 +15,6 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Physical single-partition-window sweep (r15, VERDICT r14 #3):
-    // env-gated so driver runs stay byte-identical; the listener sees
-    // every execution INCLUDING localCheckpoint interiors — the
-    // logical audit's documented blind spot. Findings land in
-    // BENCH_WINSWEEP.txt below.
-    val winSweep = sys.env.get("SPARK_GRAFT_WINSWEEP").contains("1")
-    if (winSweep) {
-      WindowAudit.currentKey = "<warmup>"
-      WindowAudit.register(spark)
-    }
     // Untimed warm-up: JVM/codegen/session initialization is fixed cost,
     // not operator cost — first timed query otherwise absorbs ~4-5 s.
     // Best-effort: a bad sfDir must still fall through to the timed
@@ -68,6 +58,9 @@ object Bench {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         wq.awaitTermination()
+        // the memory sink's rows live as long as its view (the
+        // Streaming.drain pattern): drop it once the warm-up is done
+        spark.catalog.dropTempView("graft_warm_stream")
         // second streaming init shape: the SYMMETRIC-HASH-JOIN state
         // store (stream-stream joins) loads a different provider path
         // than the agg/dedup store warmed above — an r8 board run showed
@@ -85,6 +78,7 @@ object Bench {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         jq.awaitTermination()
+        spark.catalog.dropTempView("graft_warm_join")
       }
       // unigram-fit shape: eager localCheckpoint of a token-count
       // synopsis + a broadcast scoring join — text_perplexity_buckets
@@ -126,7 +120,6 @@ object Bench {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     def timeKey(name: String, fn: (SparkSession, String) => DataFrame,
                 recordError: Boolean = true): Option[Double] = {
-      if (winSweep) WindowAudit.currentKey = name
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -232,27 +225,6 @@ object Bench {
       java.nio.file.Paths.get(outPath), line + "\n")
     catch { case e: Throwable =>
       System.err.println(s"Bench: failed to write $outPath: $e") }
-    if (winSweep) {
-      // give the async listener bus a moment to drain before reading
-      // (listenerBus.waitUntilEmpty is private[spark]; a fixed grace
-      // period suffices for an audit)
-      Thread.sleep(2000)
-      val (lines, novel) = WindowAudit.report()
-      val hdr = s"# physical single-partition-window sweep " +
-        s"(sf=$sfDir, ${results.size} keys; exempt = in " +
-        s"WindowAudit.exemptions/interiorExemptions)"
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outPath).resolveSibling(
-          "BENCH_WINSWEEP.txt"),
-        (hdr +: lines).mkString("", "\n", "\n"))
-      catch { case e: Throwable =>
-        System.err.println(s"Bench: failed to write winsweep: $e") }
-      System.err.println(s"[winsweep] ${lines.size} distinct " +
-        s"single-partition window shapes, ${novel.size} NOVEL" +
-        (if (novel.nonEmpty)
-          s": ${novel.toSeq.sorted.mkString(" | ").take(400)}"
-         else ""))
-    }
     spark.stop()
   }
 }

@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   * text_substring_dedup_chars class, 43× corpus, invisible to
   * plan-shape greps for four rounds) now fails loudly. Regenerate
   * the table with `--write-expected` after an intentional plan
-  * change (and commit the diff — the review IS the audit).
+  * change (and commit the diff — the review IS the audit). A run over
+  * a key subset rewrites only those keys' ceilings and keeps the rest
+  * (see [[composeCeilings]]).
   *
   * Listener note: stage-completed events post asynchronously; the
   * counters are AtomicLongs and the harness quiesces by polling until
@@ -38,6 +40,23 @@ import org.apache.spark.sql.functions._
 object ShuffleAudit {
   private val expectedPath =
     java.nio.file.Paths.get("tools/shuffle_expected.tsv")
+
+  /** The ceiling table a `--write-expected` run writes, or the reason
+    * it must not write one. A full-board run replaces the committed
+    * table. A key subset is merged over it, so every other key keeps
+    * its ceiling; that is refused when the committed ceilings were
+    * measured at another sf (`committedSf`), since the merged table
+    * would mix two scales under one stamp. */
+  private[graft] def composeCeilings(committed: Map[String, Long],
+      committedSf: Option[String], sfTag: String,
+      newCaps: Map[String, Long],
+      fullBoard: Boolean): Either[String, Map[String, Long]] =
+    if (fullBoard) Right(newCaps)
+    else if (committed.nonEmpty && !committedSf.contains(sfTag))
+      Left(s"the committed ceilings are stamped " +
+        s"sf=${committedSf.getOrElse("<none>")}, this run is sf=$sfTag; " +
+        "regenerate the full board at this sf instead")
+    else Right(committed ++ newCaps)
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
@@ -54,22 +73,23 @@ object ShuffleAudit {
     // disarms, loudly, on mismatch — mirroring BaselineAnchors'
     // env-match discipline.
     val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
+    val lines =
+      if (java.nio.file.Files.exists(expectedPath))
+        scala.io.Source.fromFile(expectedPath.toFile).getLines().toList
+      else Nil
+    val stamped = lines.headOption
+      .flatMap("""sf=(\S+)""".r.findFirstMatchIn(_))
+      .map(_.group(1))
+    val committed: Map[String, Long] = lines
+      .filterNot(l => l.startsWith("#") || l.isBlank)
+      .map { l => val p = l.split("\t"); p(0) -> p(1).toLong }
+      .toMap
     val expected: Map[String, Long] =
-      if (java.nio.file.Files.exists(expectedPath)) {
-        val lines = scala.io.Source.fromFile(expectedPath.toFile)
-          .getLines().toList
-        val stamped = lines.headOption
-          .flatMap("""sf=(\S+)""".r.findFirstMatchIn(_))
-          .map(_.group(1))
-        if (stamped.exists(_ != sfTag)) {
-          println(s"SHUFAUDIT gate DISARMED: ceilings stamped " +
-            s"sf=${stamped.get}, this run is sf=$sfTag")
-          Map.empty
-        } else lines
-          .filterNot(l => l.startsWith("#") || l.isBlank)
-          .map { l => val p = l.split("\t"); p(0) -> p(1).toLong }
-          .toMap
-      } else Map.empty
+      if (stamped.exists(_ != sfTag)) {
+        println(s"SHUFAUDIT gate DISARMED: ceilings stamped " +
+          s"sf=${stamped.get}, this run is sf=$sfTag")
+        Map.empty
+      } else committed
 
     val spark = SparkSession.builder()
       .master("local[32]")
@@ -154,7 +174,7 @@ object ShuffleAudit {
         // ceiling = 2× measured, floored at 1 MB (tiny keys jitter by
         // compression/AQE layout, never by structure)
         val newCaps = measured.map { case (k, v) =>
-          k -> math.max(v * 2, 1L << 20) }
+          k -> math.max(v * 2, 1L << 20) }.toMap
         // Ceiling-delta guard (r16, VERDICT r15 #7): "2× whatever the
         // last regeneration measured" is a ratchet that can absorb
         // slow structural creep — every raise >1.5× over the
@@ -172,12 +192,18 @@ object ShuffleAudit {
         if (raised.nonEmpty)
           println(s"CEILING-RAISE SUMMARY: ${raised.size} key(s) " +
             "raised >1.5x over the committed table")
-        val lines = s"# sf=$sfTag key\tmax_shuffle_bytes (2x clean-run " +
-          "measured; regenerate with --write-expected)\n" +
-          newCaps.map { case (k, v) => s"$k\t$v" }.mkString("\n") + "\n"
-        java.nio.file.Files.writeString(expectedPath, lines)
-        println(s"wrote ${measured.size} ceilings to $expectedPath " +
-          s"(sf=$sfTag)")
+        composeCeilings(committed, stamped, sfTag, newCaps,
+            fullBoard = keys.toSet == SparkEntry.queries.keySet) match {
+          case Left(why) => println(s"REFUSING --write-expected: $why")
+          case Right(table) =>
+            val text = s"# sf=$sfTag key\tmax_shuffle_bytes (2x clean-run " +
+              "measured; regenerate with --write-expected)\n" +
+              table.toSeq.sorted.map { case (k, v) => s"$k\t$v" }
+                .mkString("\n") + "\n"
+            java.nio.file.Files.writeString(expectedPath, text)
+            println(s"wrote ${table.size} ceilings (${measured.size} " +
+              s"measured) to $expectedPath (sf=$sfTag)")
+        }
       }
     }
     println(s"SHUFAUDIT SUMMARY keys=${measured.size} " +

@@ -24,15 +24,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    localCheckpoint materialization's own plan — and records any
   *    WindowExec / WindowGroupLimitExec whose partitionSpec is empty
   *    (or all-foldable), attributed to the key running at fire time.
-  *    Enabled in Bench under SPARK_GRAFT_WINSWEEP=1 (env-gated so
-  *    driver bench runs are byte-identical); findings land in
-  *    BENCH_WINSWEEP.txt and stderr, split exempt vs NOVEL.
+  *    PlanShapeSpec's board audit runs it around every key's
+  *    construction and requires [[report]] to find no NOVEL shape;
+  *    the r15 sweep results are recorded in PLANS.md.
   *
-  * Attribution note: the listener bus is asynchronous, so a finding
-  * can in principle land on the next key when dispatch outlives a
-  * sub-millisecond query; keys run ~0.7 s, so in practice attribution
-  * is stable — and a finding is a finding regardless of which
-  * neighbouring key it pins to.
+  * Attribution note: the listener bus is asynchronous, so the caller
+  * drains it before moving `currentKey` to the next key.
   */
 object WindowAudit {
 
@@ -128,8 +125,9 @@ object WindowAudit {
   val findings: TrieMap[(String, String), Long] = TrieMap.empty
   @volatile var currentKey: String = "<init>"
 
-  def register(spark: SparkSession): Unit =
-    spark.listenerManager.register(new QueryExecutionListener {
+  /** Registers the sweep listener; the caller unregisters it. */
+  def register(spark: SparkSession): QueryExecutionListener = {
+    val l = new QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit = {
@@ -144,7 +142,10 @@ object WindowAudit {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
-    })
+    }
+    spark.listenerManager.register(l)
+    l
+  }
 
   /** Summarize findings → (report lines, novel descriptions).
     * One line per DISTINCT window description (attribution keys are
@@ -156,8 +157,8 @@ object WindowAudit {
     val byDesc = findings.keys.groupBy(_._2).map { case (d, ks) =>
       d -> ks.map(_._1).toSeq.distinct.sorted
     }
-    val allowedKeys = exemptions.keySet ++ interiorExemptions.keySet ++
-      Set("<init>", "<warmup>")
+    val allowedKeys = exemptions.keySet ++ interiorExemptions.keySet +
+      "<init>"
     val novel = scala.collection.mutable.Set.empty[String]
     val lines = byDesc.toSeq.sortBy(_._1).map { case (d, ks) =>
       val tag = boundedWindowPatterns.find(p => d.contains(p._1)) match {

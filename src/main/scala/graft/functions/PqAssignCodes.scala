@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * Σ_j (v[m·SD+j] − cb[m][k][j])², ties to the smallest k.
   *
   * Why a custom Expression (SURVEY §7.3, the [[LshSignatures]]
-  * rationale, found by the r9 PqSweep): the declarative form —
-  * explode to (sub, sv) rows, then
+  * rationale, found by the r9 PQ geometry sweep in PLANS.md): the
+  * declarative form — explode to (sub, sv) rows, then
   * `array_min(transform(sequence(0,K-1), c -> struct(aggregate(
   * zip_with(sv, cb[sub][c], …)), c)))` — runs interpreted lambda
   * HOFs: per element it allocates zip arrays and boxes doubles, and

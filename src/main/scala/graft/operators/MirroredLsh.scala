@@ -41,11 +41,8 @@ import org.apache.spark.sql.functions._
   * with 3–4 tables and a far smaller candidate set.
   */
 object MirroredLsh {
-  /** Geometry knobs. Defaults are the SHIPPED values (what the driver
-    * and oracle see); the env overrides exist only so the
-    * sim_ann_recall_eval sweep can A/B geometries without recompiling —
-    * both the Spark side and candidateSqlCtes read the same constants,
-    * so any override keeps engine and oracle in lockstep.
+  /** Geometry. Both the Spark side and candidateSqlCtes read these
+    * constants, so engine and oracle stay in lockstep.
     *
     * r7 sweep, measured by sim_ann_recall_eval at sf0.1 (mean
     * recall@10 over the 5-query batch; candidate fraction counted via
@@ -57,8 +54,8 @@ object MirroredLsh {
     * only +0.085 fraction. On clustered real corpora (intra-cluster
     * p ≥ 0.9) the same geometry over-delivers and L can drop to 3–4
     * tables. */
-  val NTables = sys.env.getOrElse("GRAFT_LSH_TABLES", "28").toInt
-  val NBits = sys.env.getOrElse("GRAFT_LSH_BITS", "6").toInt
+  val NTables = 28
+  val NBits = 6
   val Dim = 64
 
   /** signs(t * NBits + j)(i) ∈ {−1.0, +1.0} — from bit i of

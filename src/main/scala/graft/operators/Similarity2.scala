@@ -41,7 +41,7 @@ object Similarity2 {
 
   /** PQ geometry shared by sim_pq_ann / sim_pq_recall_eval AND their
     * generated oracles (single source — the two engines cannot drift
-    * on M×K). Chosen by the r9 PqSweep recorded in PLANS.md: the r8
+    * on M×K). Chosen by the r9 geometry sweep recorded in PLANS.md: the r8
     * shipped geometry M=4×K=8 (12 bits/vector) measured recall@10 ≈
     * 0.22 on the near-random fixtures — the harness said the code
     * budget, not the fit, was the binding constraint. M=32 × K=128
@@ -50,27 +50,25 @@ object Similarity2 {
     * fixture embeddings are near-random (variance uniform across
     * dims, nothing for larger subspaces to exploit); a production
     * corpus with correlated dims shifts the optimum toward fewer,
-    * wider subspaces — which is exactly what the sweep harness exists
-    * to re-decide per corpus. PqRounds is pinned at 1 because the
-    * generated oracles replay exactly one Lloyd round. */
+    * wider subspaces, so the sweep (PLANS.md r9) is worth re-running
+    * per corpus. PqRounds is pinned at 1 because the generated
+    * oracles replay exactly one Lloyd round. */
   val PqM = 32
   val PqK = 128
   val PqRounds = 1
   def PqSD: Int = 64 / PqM
 
-  /** The shared PQ front half, geometry-parameterized for the sweep
-    * harness (PqSweep main): fit the M × K codebook (seed =
-    * sub-slices of the first K vectors, `rounds` exact-DECIMAL Lloyd
+  /** The shared PQ front half: fit the PqM × PqK codebook (seed =
+    * sub-slices of the first PqK vectors, PqRounds exact-DECIMAL Lloyd
     * rounds, ≤ M·K·SD groups on 4 partitions), assign per-vector
     * codes, and score the 5-query probe batch by asymmetric distance.
     * Returns (cached emb — caller unpersists, per-(qid, vec_id)
     * DECIMAL ADC). Shared VERBATIM by sim_pq_ann (top-3 report) and
     * sim_pq_recall_eval (recall@10) so the two keys can never diverge
     * on fit or scoring — the MirroredLsh single-source precedent. */
-  private[graft] def pqAdcGeo(s: SparkSession, d: String, M: Int, K: Int,
-      rounds: Int): (DataFrame, DataFrame) = {
+  private def pqAdc(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
-    val SD = 64 / M
+    val M = PqM; val K = PqK; val SD = PqSD
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), expr(dbl("embedding")).as("v")).cache()
     val seed: Seq[Seq[Double]] = emb.orderBy("vec_id").limit(K)
@@ -94,7 +92,7 @@ object Similarity2 {
     // shuffle to 4 partitions regardless of corpus size (map-side
     // partials reduce before the exchange), as in sim_ivf_ann
     SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "4") {
-      for (_ <- 0 until rounds) {
+      for (_ <- 0 until PqRounds) {
         val means = codesOf(cb)
           .select(col("sub"), col("cid"),
             posexplode(expr(s"slice(v, sub*$SD + 1, $SD)"))
@@ -132,16 +130,10 @@ object Similarity2 {
     (emb, adc)
   }
 
-  private def pqAdc(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    pqAdcGeo(s, d, PqM, PqK, PqRounds)
-
-  /** recall@10 of the ADC top-10 against exact-L2 truth per probe,
-    * geometry-parameterized — the body of sim_pq_recall_eval, exposed
-    * so the PqSweep main measures candidate geometries with the
-    * exact declared scoring path. */
-  private[graft] def pqRecall(s: SparkSession, d: String, M: Int, K: Int,
-      rounds: Int): DataFrame = {
-    val (emb, adc) = pqAdcGeo(s, d, M, K, rounds)
+  /** recall@10 of the ADC top-10 against exact-L2 truth per probe —
+    * the body of sim_pq_recall_eval. */
+  private def pqRecall(s: SparkSession, d: String): DataFrame = {
+    val (emb, adc) = pqAdc(s, d)
     val wa = Window.partitionBy("qid").orderBy(col("adcd"), col("vec_id"))
     val adc10 = adc.withColumn("rn", row_number().over(wa))
       .filter(col("rn") <= 10).select("qid", "vec_id")
@@ -381,9 +373,9 @@ object Similarity2 {
     // exact-L2 truth per probe. This is the number that decides M×K
     // (and whether residual IVFADC is needed) before a 100 TB build —
     // it is exactly how the shipped PqM×PqK geometry was chosen (see
-    // PqSweep + PLANS.md); the exact-L2 leg is bounded by the
+    // PLANS.md r9); the exact-L2 leg is bounded by the
     // broadcast 5-query batch over one corpus scan — never all-pairs.
-    "sim_pq_recall_eval" -> ((s, d) => pqRecall(s, d, PqM, PqK, PqRounds)),
+    "sim_pq_recall_eval" -> ((s, d) => pqRecall(s, d)),
 
     "sim_ivfpq_ann" -> ivfpqQuery,
   )

@@ -235,17 +235,7 @@ object Similarity3 {
   }
 
   /** R-round greedy beam over `edges` for query frame `q` (qid, qe),
-    * starting from `entry` (node); scores against `e`. `rounds`
-    * defaults to the shipped R; the sweep harness (GraphAnnSweep)
-    * passes other values — declared keys always use the default. */
-  private def beamSearch(e: DataFrame, edges: DataFrame, q: DataFrame,
-      entry: DataFrame, rounds: Int = R): DataFrame =
-    beamSearchFrom(e, edges, q, q.select(col("qid")).crossJoin(entry),
-      rounds)
-
-  /** Beam from an arbitrary per-query seed frame (qid, node) — what a
-    * hierarchical entry layer produces (per-QUERY entries instead of
-    * the fixed spine). `q` (qid, qe) supplies the query vectors.
+    * seeded with every query × every `entry` node; scores against `e`.
     *
     * r16 (VERDICT r15 #2, guide §2.3 "shuffle keys and metadata
     * instead of payloads"): the candidate multiset used to carry qe —
@@ -256,9 +246,10 @@ object Similarity3 {
     * (qid, node) ids; qe is joined back from the ≤INS-row broadcast
     * `q` AFTER the dedup, so the exchange and the checkpoints carry
     * ids only. Same (qid, node) set scored, same cosine inputs —
-    * results identical. */
-  private def beamSearchFrom(e: DataFrame, edges: DataFrame,
-      q: DataFrame, seed: DataFrame, rounds: Int): DataFrame = {
+    * results identical. The R and entry-layer alternatives measured
+    * in r13 are recorded in PLANS.md. */
+  private def beamSearch(e: DataFrame, edges: DataFrame, q: DataFrame,
+      entry: DataFrame): DataFrame = {
     val wQ = Window.partitionBy("qid")
       .orderBy(round(col("cos"), 4).desc, col("node"))
     // rescore accepts a candidate MULTISET and dedups (qid, node) on
@@ -277,8 +268,8 @@ object Similarity3 {
       .withColumn("rk", row_number().over(wQ))
       .filter(col("rk") <= EF)
       .select(col("qid"), col("node"), col("cos"))
-    var beam = rescore(seed).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    var beam = rescore(q.select(col("qid")).crossJoin(entry)).localCheckpoint()
+    for (_ <- 1 to R) {
       val expanded = beam.select(col("qid"), col("node"))
         .join(edges, col("node") === col("a"))
         .select(col("qid"), col("b").as("node"))
@@ -290,63 +281,6 @@ object Similarity3 {
     }
     beam.select(col("qid"), col("node"), col("cos"))
   }
-
-  /** Sweep hook (GraphAnnSweep, VERDICT r12 #8): mean recall@10 of a
-    * parameterized search geometry against brute-force truth.
-    * `hierStride ≤ 0` → the shipped flat entry spine (first member of
-    * the first NENT id-blocks); `hierStride > 0` → HIERARCHICAL entry:
-    * score the coarse layer (every hierStride-th node) per query and
-    * seed the beam from its top-`nEnt` — the HNSW upper-layer idea.
-    * At fixture scale the coarse layer is brute-scored (≤ N/stride
-    * rows per query); in production it gets its own graph, so the
-    * per-query coarse cost is O(R'·ef'·M), still corpus-independent.
-    * Returns one row per query: (qid, n_true, n_hit, recall10). */
-  private[graft] def recallGeo(s: SparkSession, d: String,
-      hierStride: Int, nEnt: Int, rounds: Int): DataFrame =
-    withFewPartitions(s) {
-      graft.functions.GraftFunctions.register(s)
-      val e = embeddingsOnce(s, d)
-      val edges = buildEdges(e)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val seed =
-        if (hierStride <= 0)
-          q.select(col("qid")).crossJoin(
-            e.filter(pmod(col("vec_id"), lit(BLOCK)) === 0
-              && col("vec_id") < BLOCK * NENT)
-            .select(col("vec_id").as("node")))
-        else {
-          val coarse = e.filter(pmod(col("vec_id"), lit(hierStride)) === 0)
-            .select(col("vec_id").as("node"), col("embedding").as("ne"))
-          val wC = Window.partitionBy("qid")
-            .orderBy(round(col("cos"), 4).desc, col("node"))
-          q.crossJoin(coarse)
-            .withColumn("cos", expr("cosine_sim(qe, ne)"))
-            .withColumn("rk", row_number().over(wC))
-            .filter(col("rk") <= nEnt)
-            .select(col("qid"), col("node"))
-        }
-      val got = beamSearchFrom(e, edges, q, seed, rounds)
-        .filter(col("node") =!= col("qid"))
-        .withColumn("rank", row_number().over(Window.partitionBy("qid")
-          .orderBy(round(col("cos"), 4).desc, col("node"))))
-        .filter(col("rank") <= 10)
-        .select(col("qid"), col("node").as("vec_id"))
-        .withColumn("hit", lit(1))
-      val wt = Window.partitionBy("qid")
-        .orderBy(round(col("cos"), 4).desc, col("vec_id"))
-      val truth = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-        .withColumn("rank", row_number().over(wt))
-        .filter(col("rank") <= 10)
-        .select(col("qid"), col("vec_id"))
-      truth.join(got, Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
-        .select(col("qid"), col("n_true"), col("n_hit"),
-          (col("n_hit") * lit(1.0) / col("n_true")).as("recall10"))
-        .orderBy("qid")
-    }
 
   val queries: Map[String, Q] = Map(
     // Graph-ANN top-3 — same report shape as sim_cosine_topk /

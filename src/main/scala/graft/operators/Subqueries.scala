@@ -183,24 +183,31 @@ object Subqueries {
     // the same expressions textually inlined in DuckDB.
     "fn_sql_udf" -> ((s, d) =>
       withViews(s)("graft_lineitem_v" -> Tables.lineitem(s, d)) {
-        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
-                   p DOUBLE, disc DOUBLE) RETURNS DOUBLE
-                 RETURN p * (1 - disc)""")
-        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_price_band(
-                   p DOUBLE) RETURNS STRING
-                 RETURN CASE WHEN p < 20000 THEN 'low'
-                             WHEN p < 50000 THEN 'mid'
-                             ELSE 'high' END""")
-        s.sql(
-          """SELECT l_returnflag,
-                    graft_price_band(l_extendedprice) AS band,
-                    count(*) AS n,
-                    round(CAST(sum(CAST(graft_disc_price(l_extendedprice,
-                      l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4)
-                      AS revenue
-             FROM graft_lineitem_v
-             GROUP BY l_returnflag, graft_price_band(l_extendedprice)
-             ORDER BY l_returnflag, band""")
+        // the analyzed frame has both bodies inlined, so it outlives
+        // the functions, as it outlives the view
+        try {
+          s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
+                     p DOUBLE, disc DOUBLE) RETURNS DOUBLE
+                   RETURN p * (1 - disc)""")
+          s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_price_band(
+                     p DOUBLE) RETURNS STRING
+                   RETURN CASE WHEN p < 20000 THEN 'low'
+                               WHEN p < 50000 THEN 'mid'
+                               ELSE 'high' END""")
+          s.sql(
+            """SELECT l_returnflag,
+                      graft_price_band(l_extendedprice) AS band,
+                      count(*) AS n,
+                      round(CAST(sum(CAST(graft_disc_price(l_extendedprice,
+                        l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4)
+                        AS revenue
+               FROM graft_lineitem_v
+               GROUP BY l_returnflag, graft_price_band(l_extendedprice)
+               ORDER BY l_returnflag, band""")
+        } finally {
+          s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_disc_price")
+          s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_price_band")
+        }
       }),
 
     // SQL-body TABLE function (r13) — CREATE FUNCTION ... RETURNS
@@ -222,21 +229,23 @@ object Subqueries {
     // a band edge the comparisons don't).
     "fn_sql_table_udf" -> ((s, d) =>
       withViews(s)("graft_orders_v" -> Tables.orders(s, d)) {
-        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_bands(
-                   lo DOUBLE, hi DOUBLE, n INT)
-                 RETURNS TABLE (band INT, blo DOUBLE, bhi DOUBLE)
-                 RETURN SELECT band, lo + band * (hi - lo) / n AS blo,
-                               lo + (band + 1) * (hi - lo) / n AS bhi
-                        FROM (SELECT explode(sequence(0, n - 1)) AS band)""")
-        s.sql(
-          """SELECT o_orderstatus, b.band, count(*) AS n,
-                    round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                      AS DOUBLE), 4) AS total
-             FROM graft_orders_v o,
-                  LATERAL graft_bands(0.0, 600000.0, 4) b
-             WHERE o.o_totalprice >= b.blo AND o.o_totalprice < b.bhi
-             GROUP BY o_orderstatus, b.band
-             ORDER BY o_orderstatus, band""")
+        try {
+          s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_bands(
+                     lo DOUBLE, hi DOUBLE, n INT)
+                   RETURNS TABLE (band INT, blo DOUBLE, bhi DOUBLE)
+                   RETURN SELECT band, lo + band * (hi - lo) / n AS blo,
+                                 lo + (band + 1) * (hi - lo) / n AS bhi
+                          FROM (SELECT explode(sequence(0, n - 1)) AS band)""")
+          s.sql(
+            """SELECT o_orderstatus, b.band, count(*) AS n,
+                      round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                        AS DOUBLE), 4) AS total
+               FROM graft_orders_v o,
+                    LATERAL graft_bands(0.0, 600000.0, 4) b
+               WHERE o.o_totalprice >= b.blo AND o.o_totalprice < b.bhi
+               GROUP BY o_orderstatus, b.band
+               ORDER BY o_orderstatus, band""")
+        } finally s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_bands")
       }),
 
     // Correlated LATERAL join (SQL-surface lateral subquery): a

@@ -745,36 +745,53 @@ class PlanShapeSpec extends GraftSuite {
     // the exemption list below with its grain bound; exact set
     // equality both ways keeps the list honest (no stale entries).
     //
-    // Known blind spot, documented: frames materialized by an eager
-    // localCheckpoint during key CONSTRUCTION appear as LogicalRDD,
-    // so windows inside already-executed iterative rounds are
-    // invisible here — those interiors are pinned by their own
-    // per-key specs (kcore/MMR/NN-descent pattern).
-    // single-sourced with the r15 PHYSICAL sweep (WindowAudit):
-    // the map lives in main scope so Bench's listener-based
-    // checkpoint-interior sweep and this logical walk can never
-    // disagree about what is exempt
+    // Frames materialized by an eager localCheckpoint during key
+    // CONSTRUCTION appear as LogicalRDD, so windows inside
+    // already-executed iterative rounds are invisible to this logical
+    // walk. The PHYSICAL sweep (WindowAudit) closes that blind spot in
+    // the same pass: its listener sees every execution that `fn`
+    // runs, checkpoint interiors included. Both read the exemption
+    // map from main scope so they can never disagree about what is
+    // exempt.
     val exempt: Map[String, String] = WindowAudit.exemptions
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // The same pass checks that every key is hermetic: constructing it
-    // leaves the session's SQL conf and temp views exactly as it found
-    // them (SessionScope), so no key can change what a later key sees.
+    // leaves the session's SQL conf, temp views and temp functions
+    // exactly as it found them (SessionScope), so no key can change
+    // what a later key sees.
     def views(): Set[String] = spark.catalog.listTables().collect()
       .filter(_.isTemporary).map(_.name).toSet
+    // SessionCatalog's list, not spark.catalog.listFunctions(): that
+    // builds a Function record for each of the ~500 built-ins on every
+    // call, which took about a third of this pass's time
+    def tempFunctions(): Set[String] =
+      spark.sessionState.catalog.listTemporaryFunctions().map(_.funcName).toSet
+    def diff(kind: String, before: Set[String], after: Set[String]) =
+      (after -- before).toSeq.sorted.map(s"+$kind " + _) ++
+        (before -- after).toSeq.sorted.map(s"-$kind " + _)
+    // the graft kernels are session-wide registrations that many keys
+    // repeat, so they belong to the baseline
+    graft.functions.GraftFunctions.register(spark)
     val residue = Seq.newBuilder[String]
-    val flagged = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    WindowAudit.findings.clear()
+    val sweep = WindowAudit.register(spark)
+    val flagged = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (k, fn) =>
-        val (conf0, views0) = (spark.conf.getAll, views())
+        val (conf0, views0, fns0) =
+          (spark.conf.getAll, views(), tempFunctions())
+        WindowAudit.currentKey = k
         val df = fn(spark, sf)
-        val (conf1, views1) = (spark.conf.getAll, views())
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        val (conf1, views1, fns1) =
+          (spark.conf.getAll, views(), tempFunctions())
         val confDiff = (conf0.keySet ++ conf1.keySet).toSeq.sorted
           .filter(c => conf0.get(c) != conf1.get(c))
           .map(c => s"$c: ${conf0.getOrElse(c, "<unset>")} -> " +
             conf1.getOrElse(c, "<unset>"))
-        val viewDiff = (views1 -- views0).toSeq.sorted.map("+view " + _) ++
-          (views0 -- views1).toSeq.sorted.map("-view " + _)
-        if (confDiff.nonEmpty || viewDiff.nonEmpty)
-          residue += s"$k: ${(confDiff ++ viewDiff).mkString(", ")}"
+        val stateDiff = confDiff ++ diff("view", views0, views1) ++
+          diff("function", fns0, fns1)
+        if (stateDiff.nonEmpty)
+          residue += s"$k: ${stateDiff.mkString(", ")}"
         val n = df.queryExecution.optimizedPlan.collect {
           case w: LWindow
             if w.partitionSpec.isEmpty ||
@@ -782,10 +799,19 @@ class PlanShapeSpec extends GraftSuite {
         }.size
         if (n > 0) Some(k) else None
     }.toSet
+    finally spark.listenerManager.unregister(sweep)
     val leaks = residue.result()
     assert(leaks.isEmpty,
       s"${leaks.size} key(s) left session state behind:\n" +
         leaks.mkString("\n"))
+    val (sweepLines, novel) = WindowAudit.report()
+    info(s"physical sweep: ${sweepLines.size} distinct single-partition " +
+      s"window shape(s), ${novel.size} NOVEL")
+    assert(novel.isEmpty,
+      s"physical sweep: ${novel.size} NOVEL single-partition window " +
+        s"shape(s) inside key construction (fix, or classify with its " +
+        s"grain bound in WindowAudit):\n" +
+        sweepLines.filter(_.startsWith("NOVEL")).mkString("\n"))
     assert((flagged -- exempt.keySet).isEmpty,
       s"keys with a NEW global window and no exemption (use " +
         s"ScaleRank.withGlobalRank/withGlobalCumsum, a 1-row broadcast " +
