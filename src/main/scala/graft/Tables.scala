@@ -19,19 +19,19 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Broadcast-hint policy for joins against these loaders (r11,
-    * VERDICT r10 #3): tables that GROW WITH SF — customer, supplier,
-    * part, orders, lineitem, documents, embeddings, events — are
-    * joined HINT-FREE. AQE's runtime size check
-    * (spark.sql.autoBroadcastJoinThreshold) picks a broadcast when the
-    * actual build side fits executor memory; a forced broadcast() hint
-    * bypasses that check and at the 100 TB design point plans an
-    * unbuildable build side. Explicit broadcast() hints are reserved
-    * for frames with a PROVABLE size contract independent of corpus
-    * size: fixed-cardinality spines (region=5, nation=25), 1-row
-    * aggregates, and bounded synopses (≤256-dim keep lists, k-row
-    * model tables). Pinned in PlanShapeSpec ("sf-scaling dimension
-    * joins carry no forced broadcast hints"). */
+  /** Broadcast-hint policy for joins against these loaders: tables
+    * that GROW WITH SF — customer, supplier, part, orders, lineitem,
+    * documents, embeddings, events — are joined HINT-FREE. AQE's
+    * runtime size check (spark.sql.autoBroadcastJoinThreshold) picks
+    * a broadcast when the actual build side fits executor memory; a
+    * forced broadcast() hint bypasses that check and at the 100 TB
+    * design point plans an unbuildable build side. Explicit
+    * broadcast() hints are reserved for frames with a PROVABLE size
+    * contract independent of corpus size: fixed-cardinality spines
+    * (region=5, nation=25), 1-row aggregates, and bounded synopses
+    * (≤256-dim keep lists, k-row model tables). Pinned in
+    * PlanShapeSpec ("sf-scaling dimension joins carry no forced
+    * broadcast hints"). */
 
   /** Read one fixture table. `sfDir` is e.g. /root/testdata/sf0.01 */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -63,11 +63,4 @@ object Tables {
 
   def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventsTs(load(spark, sfDir, "events"))
-
-  /** Raw events with ts as Long nanoseconds-since-epoch (for ops that
-    * want the exact integer value, e.g. fingerprinting), reconstructed
-    * from the µs timestamp as µs × 1000. */
-  def eventsRawNanos(spark: SparkSession, sfDir: String): DataFrame =
-    load(spark, sfDir, "events").withColumn("ts",
-      unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)) * lit(1000L))
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Data-governance operators: declarative data-quality expectations
-  * with a write-audit-publish gate, snapshot diffing between staged
-  * table versions, and file-statistics manifest collection — the
-  * control plane around a staging engine's writes.
+/** Data-governance operators: declarative data-quality expectations,
+  * snapshot diffing between staged table versions, and
+  * file-statistics manifest collection — the control plane around a
+  * staging engine's writes. The write-audit-publish gate itself is
+  * `stage_write_audit_publish` in [[Lifecycle]].
   *
   * Scale notes (100 TB):
   *   - `dq_expectations`: every per-row rule folds into ONE
@@ -57,25 +58,13 @@ object Governance {
       .withColumn("passed", col("n_violations") === 0)
   }
 
-  /** Write-audit-publish: stage the batch to `outDir` only when EVERY
-    * audit rule passes. Returns true iff published. Deliberately NOT a
-    * declared query — it runs an action and a conditional write, which
-    * would make a declared "query" impure (r4 ADVICE). */
-  def writeAuditPublish(s: SparkSession, d: String, outDir: String)
-      : Boolean = {
-    val allPass = dqAudit(s, d).agg(min(col("passed"))).head.getBoolean(0)
-    if (allPass)
-      Tables.lineitem(s, d).write.mode("overwrite").parquet(outDir)
-    allPass
-  }
-
   /** Per-file (min, max) stats over `dir`, returning the files whose
     * key range overlaps [qlo, qhi] — the scan-planning half of
-    * `scan_stats_pruned_files`, shared with GovernanceSpec. r14
-    * (VERDICT r13 minor #5): the overlap filter runs IN the frame, so
-    * only the surviving file names reach the driver — at ~10⁷ files
-    * the per-file stats stay distributed and the driver holds just
-    * the planned scan list (which is what a scan planner must hold). */
+    * `scan_stats_pruned_files`, shared with GovernanceSpec. The
+    * overlap filter runs IN the frame, so only the surviving file
+    * names reach the driver — at ~10⁷ files the per-file stats stay
+    * distributed and the driver holds just the planned scan list
+    * (which is what a scan planner must hold). */
   private[graft] def statsPrune(s: SparkSession, dir: String,
       qlo: Long, qhi: Long): Seq[String] =
     s.read.parquet(dir)
@@ -90,12 +79,11 @@ object Governance {
     // Declarative DQ expectations over the lineitem batch. The
     // fixture's real duplicate rows make the uniqueness rule FAIL —
     // visible in the audit output. The declared query is a PURE
-    // DataFrame (no actions, no writes); the write-audit-publish gate
-    // that consumes this audit lives in `writeAuditPublish` below and
-    // is exercised by GovernanceSpec, not by the declared key.
+    // DataFrame (no actions, no writes): a caller that gates a
+    // publish on it runs the action itself.
     "dq_expectations" -> ((s, d) => dqAudit(s, d).orderBy("rule")),
 
-    // Embedding-table QC (r7): vector-norm distribution per label —
+    // Embedding-table QC: vector-norm distribution per label —
     // collapsed/exploded embeddings (norm ≈ 0 or huge) are the
     // classic silent failure of an embedding pipeline. Norms are
     // index-order folds (identical doubles), mean/σ from exact
@@ -124,17 +112,16 @@ object Governance {
         .orderBy("label")
     }),
 
-    // Referential-integrity audit (r7): orphan counts + parent
+    // Referential-integrity audit: orphan counts + parent
     // coverage for the three FK edges of the star. Each branch is a
     // key-grain LEFT join of the child's distinct-key aggregate
     // against the parent's key column; nothing here scans a fact
     // table twice (orphans and referenced-parent counts share the
-    // child aggregate). HINT-FREE since r12: the parent sides
+    // child aggregate). HINT-FREE: the parent sides
     // (orders/customer/part) scale with sf, so a forced broadcast()
-    // plans an unbuildable build side at 100 TB — this was the one
-    // surviving policy violation the r11 `broadcast(Tables.*)` grep
-    // missed (the hint wrapped a derived projection); AQE's size
-    // check broadcasts at fixture scale and sort-merges at 100 TB.
+    // plans an unbuildable build side at 100 TB, also when the hint
+    // wraps a derived projection of them; AQE's size check
+    // broadcasts at fixture scale and sort-merges at 100 TB.
     // Pinned in PlanShapeSpec's audited-key list. The fixture is
     // FK-clean by construction, so non-zero orphans would themselves
     // be the alarm — the declared zeros are load-bearing.
@@ -165,7 +152,7 @@ object Governance {
         .orderBy("fk")
     }),
 
-    // Freshness-lag audit (r7): how many days each event stream lags
+    // Freshness-lag audit: how many days each event stream lags
     // the freshest partition — the SLO check every scheduled pipeline
     // runs before publishing. Deterministic by construction: the
     // reference point is the CORPUS max day (no wall clock). One
@@ -183,7 +170,7 @@ object Governance {
         .orderBy("event_type")
     }),
 
-    // Cross-table reconciliation (r12) — the DQ gate referential
+    // Cross-table reconciliation — the DQ gate referential
     // integrity can't see: FKs can be perfectly clean while the MONEY
     // disagrees. Recompute each order's total from its lineitems
     // (Σ extprice·(1−disc)·(1+tax) — the TPC-H identity) and bucket
@@ -257,7 +244,7 @@ object Governance {
         .orderBy("class")
     }),
 
-    // Stats-manifest FILE PRUNING (round 6) — the scan-planning step
+    // Stats-manifest FILE PRUNING — the scan-planning step
     // that makes `sink_stats_manifest`'s stats pay off (the
     // Iceberg-style read path): stage range-partitioned files, build
     // a per-file (min, max) stats manifest, and answer a key-band
@@ -305,7 +292,7 @@ object Governance {
         .orderBy("status")
     }),
 
-    // Zero-extra-pass DQ telemetry (r13, VERDICT r12 #1): Dataset
+    // Zero-extra-pass DQ telemetry: Dataset
     // .observe()/CollectMetrics — the BATCH analog of
     // stream_quality_gate. The staging WRITE is the only action over
     // the table; the DQ aggregates ride it as a CollectMetrics node

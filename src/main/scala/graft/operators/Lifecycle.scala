@@ -1,11 +1,49 @@
 package graft.operators
 
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+import java.nio.file.StandardOpenOption.CREATE_NEW
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Staged-table lifecycle operators (SURVEY.md §2.11 round-4 block):
+/** The manifest mini-format under the `stage_*` table-format keys: a
+  * table root holds its parquet files under `data/` and one text file
+  * `manifest_v<N>.txt` per version, listing the sorted absolute path
+  * of every file visible in version N, one per line. A version, once
+  * committed, is never rewritten. */
+private[graft] object Manifest {
+  /** Sorted absolute paths of the parquet files directly in `dir`. */
+  def files(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .map(_.getAbsolutePath).sorted.toSeq
+
+  /** Write `df` as one file into `root/data/sub` (overwriting it). */
+  def writeFiles(root: String, df: DataFrame, sub: String): Seq[String] = {
+    val dir = s"$root/data/$sub"
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+    files(dir)
+  }
+
+  private def path(root: String, v: Int) = Paths.get(s"$root/manifest_v$v.txt")
+
+  /** Publish version `v`; false if `v` already exists (a concurrent
+    * writer won it). The existence check and the create are one
+    * atomic step (CREATE_NEW). */
+  def commit(root: String, v: Int, paths: Seq[String]): Boolean =
+    try {
+      Files.writeString(path(root, v), paths.mkString("\n"), CREATE_NEW)
+      true
+    } catch { case _: FileAlreadyExistsException => false }
+
+  /** The file paths of version `v`. */
+  def read(root: String, v: Int): Seq[String] =
+    Files.readString(path(root, v)).split("\n").toSeq
+}
+
+/** Staged-table lifecycle operators (SURVEY.md §2.11):
   * the mutations and maintenance jobs every staging engine needs once
   * tables live longer than one batch — upsert (MERGE), SCD-2
   * versioning, small-file compaction, z-order clustering — plus the
@@ -48,8 +86,8 @@ object Lifecycle {
   private[graft] def morton8(x: Column, y: Column): Column =
     spread8(x).bitwiseOR(shiftleft(spread8(y), 1))
 
-  /** Order-8 Hilbert distance of (`hx`, `hy`) ∈ [0,255]² → `hkey`
-    * (r14). The classic xy→d walk (8 unrolled reflect-rotate steps),
+  /** Order-8 Hilbert distance of (`hx`, `hy`) ∈ [0,255]² → `hkey`.
+    * The classic xy→d walk (8 unrolled reflect-rotate steps),
     * materialized as a COLUMN CHAIN — each step's (d, x, y) is one
     * projection over the previous step's columns, so the expression
     * tree stays linear (a nested-Column formulation doubles the tree
@@ -233,7 +271,7 @@ object Lifecycle {
     // into one sort key, range-partition + sort the write by it, and
     // fingerprint the read-back per z-bucket. Predicates on EITHER
     // source column prune row groups after this layout.
-    // Manifest-based TIME TRAVEL (round 6) — the table-format
+    // Manifest-based TIME TRAVEL — the table-format
     // primitive Delta/Iceberg provide, built from scratch over plain
     // parquet: each commit appends data files and writes an immutable
     // manifest v{N} listing every file visible in that snapshot.
@@ -247,22 +285,14 @@ object Lifecycle {
     "stage_time_travel" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("timetravel")
       val dataDir = s"$out/data"
-      def commit(df: DataFrame, version: Int): Unit = {
-        df.write.mode("append").parquet(dataDir)
-        val files = new java.io.File(dataDir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).sorted
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/manifest_v$version.txt"),
-          files.mkString("\n"))
-      }
       val base = Tables.orders(s, d)
-      commit(base.filter(col("o_orderkey") % 3 === 0), 1)
-      commit(base.filter(col("o_orderkey") % 3 === 1), 2)
-      val v1Files = java.nio.file.Files
-        .readString(java.nio.file.Paths.get(s"$out/manifest_v1.txt"))
-        .split("\n").toSeq
-      s.read.parquet(v1Files: _*)
+      // each commit appends into the one data directory and lists it
+      for (v <- 1 to 2) {
+        base.filter(col("o_orderkey") % 3 === v - 1)
+          .write.mode("append").parquet(dataDir)
+        require(Manifest.commit(out, v, Manifest.files(dataDir)))
+      }
+      s.read.parquet(Manifest.read(out, 1): _*)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           round(sum(col("o_totalprice").cast("decimal(18,2)"))
@@ -270,7 +300,7 @@ object Lifecycle {
         .orderBy("o_orderstatus")
     }),
 
-    // Copy-on-write MERGE on the manifest mini-format (round 6) — the
+    // Copy-on-write MERGE on the manifest mini-format — the
     // second table-format primitive after `stage_time_travel`'s
     // snapshot reads: a MERGE commit rewrites ONLY the data files
     // holding matched rows, appends an insert file, and publishes a
@@ -285,29 +315,12 @@ object Lifecycle {
     // asserts v2's manifest re-references 3 of v1's 4 files.
     "stage_acid_merge" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("acidmerge")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).sorted.toSeq
-      }
-      def commit(version: Int, files: Seq[String]): Unit =
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/manifest_v$version.txt"),
-          files.mkString("\n"))
-      def readVersion(version: Int): DataFrame = {
-        val files = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"$out/manifest_v$version.txt"))
-          .split("\n").toSeq
-        s.read.parquet(files: _*)
-      }
       val base = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
       // v1: 4 bucket files
-      val v1Files = (0 to 3).flatMap(b =>
-        writeFiles(base.filter(pmod(col("c_custkey"), lit(4)) === b), s"b$b"))
-      commit(1, v1Files)
+      val v1Files = (0 to 3).flatMap(b => Manifest.writeFiles(out,
+        base.filter(pmod(col("c_custkey"), lit(4)) === b), s"b$b"))
+      require(Manifest.commit(out, 1, v1Files))
       // MERGE: update acctbal+100 where c_custkey % 8 = 0 (bucket 0
       // only → rewrite exactly that file), insert mirrored rows for
       // c_custkey % 8 = 3
@@ -319,20 +332,20 @@ object Lifecycle {
         .select((-col("c_custkey")).as("c_custkey"), col("c_nationkey"),
           lit(7.77).as("c_acctbal"))
       val untouched = v1Files.filterNot(_.contains("/b0/"))
-      commit(2, untouched ++ writeFiles(newB0, "b0_v2")
-        ++ writeFiles(inserts, "ins_v2"))
-      def agg(df: DataFrame, v: Int): DataFrame =
-        df.groupBy("c_nationkey")
+      require(Manifest.commit(out, 2, untouched
+        ++ Manifest.writeFiles(out, newB0, "b0_v2")
+        ++ Manifest.writeFiles(out, inserts, "ins_v2")))
+      def agg(v: Int): DataFrame =
+        s.read.parquet(Manifest.read(out, v): _*).groupBy("c_nationkey")
           .agg(count(lit(1)).as("n"),
             round(sum(col("c_acctbal").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
           .select(lit(v).as("version"), col("c_nationkey"), col("n"),
             col("total"))
-      agg(readVersion(1), 1).unionAll(agg(readVersion(2), 2))
-        .orderBy("version", "c_nationkey")
+      agg(1).unionAll(agg(2)).orderBy("version", "c_nationkey")
     }),
 
-    // RESTORE / rollback-to-version (r7) — the recovery primitive
+    // RESTORE / rollback-to-version — the recovery primitive
     // completing the manifest mini-format's set (snapshot read / CoW
     // MERGE / DELETE+VACUUM / OPTIMIZE / CDC / RESTORE): after a bad
     // commit lands as v2, RESTORE publishes manifest v3 whose file
@@ -344,44 +357,27 @@ object Lifecycle {
     // hash-checked semantics, not a side assertion.
     "stage_manifest_restore" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("restore")
-      val dataDir = s"$out/data"
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$dataDir/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
-      def commit(version: Int, files: Seq[String]): Unit =
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/manifest_v$version.txt"),
-          files.mkString("\n"))
-      def readVersion(version: Int): DataFrame = {
-        val files = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"$out/manifest_v$version.txt"))
-          .split("\n").toSeq
-        s.read.parquet(files: _*)
-      }
       val base = Tables.orders(s, d)
-      val v1Files = writeFiles(base.filter(col("o_orderkey") % 3 === 0), "good")
-      commit(1, v1Files)
+      val v1Files = Manifest.writeFiles(out,
+        base.filter(col("o_orderkey") % 3 === 0), "good")
+      require(Manifest.commit(out, 1, v1Files))
       // the bad commit: a miscomputed batch lands as v2
-      commit(2, v1Files ++ writeFiles(
+      require(Manifest.commit(out, 2, v1Files ++ Manifest.writeFiles(out,
         base.filter(col("o_orderkey") % 3 === 1)
-          .withColumn("o_totalprice", col("o_totalprice") * -1), "bad"))
-      commit(3, v1Files) // RESTORE to v1: republish v1's file list
-      def agg(df: DataFrame, v: Int): DataFrame =
-        df.groupBy("o_orderstatus")
+          .withColumn("o_totalprice", col("o_totalprice") * -1), "bad")))
+      // RESTORE to v1: republish v1's file list
+      require(Manifest.commit(out, 3, v1Files))
+      def agg(v: Int): DataFrame =
+        s.read.parquet(Manifest.read(out, v): _*).groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
           .select(lit(v).as("version"), col("o_orderstatus"), col("n"),
             col("total"))
-      agg(readVersion(2), 2).unionAll(agg(readVersion(3), 3))
-        .orderBy("version", "o_orderstatus")
+      agg(2).unionAll(agg(3)).orderBy("version", "o_orderstatus")
     }),
 
-    // PARTITION EVOLUTION (r7) — the Iceberg capability the mini-
+    // PARTITION EVOLUTION — the Iceberg capability the mini-
     // format was still missing: the partition spec changes for NEW
     // data only (spec1 = custkey%2 buckets → spec2 = custkey%4),
     // old files are NEVER rewritten, and each file prunes under THE
@@ -396,21 +392,14 @@ object Lifecycle {
     // fewer files.
     "stage_partition_evolution" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("partevo")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
       val o = Tables.orders(s, d)
       // v1 under spec1: old data bucketed by o_custkey % 2
       val spec1 = (0 to 1).map(b => b ->
-        writeFiles(o.filter(col("o_orderkey") % 2 === 0)
+        Manifest.writeFiles(out, o.filter(col("o_orderkey") % 2 === 0)
           .filter(pmod(col("o_custkey"), lit(2)) === b), s"s1_b$b"))
       // v2 appends new data under spec2: o_custkey % 4 — old files kept
       val spec2 = (0 to 3).map(b => b ->
-        writeFiles(o.filter(col("o_orderkey") % 2 === 1)
+        Manifest.writeFiles(out, o.filter(col("o_orderkey") % 2 === 1)
           .filter(pmod(col("o_custkey"), lit(4)) === b), s"s2_b$b"))
       // manifest: (spec, bucket) -> files; query predicate custkey%4=1
       // prunes per spec: spec1 keeps bucket 1%2, spec2 keeps bucket 1
@@ -428,7 +417,7 @@ object Lifecycle {
         .orderBy("o_orderstatus")
     }),
 
-    // OPTIMISTIC CONCURRENT APPEND (r7) — the commit protocol that
+    // OPTIMISTIC CONCURRENT APPEND — the commit protocol that
     // makes the manifest format multi-writer: writers A and B both
     // prepare appends against v1; A wins the v2 commit; B's attempt
     // detects v2 exists (atomic create-new fails), REBASES by
@@ -441,37 +430,21 @@ object Lifecycle {
     // exactly once.
     "stage_concurrent_append" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("concappend")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
-      def tryCommit(version: Int, files: Seq[String]): Boolean = {
-        val p = java.nio.file.Paths.get(s"$out/manifest_v$version.txt")
-        try {
-          java.nio.file.Files.writeString(p, files.mkString("\n"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      }
-      def readManifest(version: Int): Seq[String] = java.nio.file.Files
-        .readString(java.nio.file.Paths.get(s"$out/manifest_v$version.txt"))
-        .split("\n").toSeq
       val o = Tables.orders(s, d)
-      val baseF = writeFiles(o.filter(col("o_orderkey") % 3 === 0), "base")
-      require(tryCommit(1, baseF))
+      def stage(m: Int, sub: String): Seq[String] = Manifest.writeFiles(out,
+        o.filter(col("o_orderkey") % 3 === m), sub)
+      val baseF = stage(0, "base")
+      require(Manifest.commit(out, 1, baseF))
       // both writers snapshot v1 and stage their data files
-      val aF = writeFiles(o.filter(col("o_orderkey") % 3 === 1), "wa")
-      val bF = writeFiles(o.filter(col("o_orderkey") % 3 === 2), "wb")
+      val aF = stage(1, "wa")
+      val bF = stage(2, "wb")
       // writer A commits v2 first
-      require(tryCommit(2, baseF ++ aF))
+      require(Manifest.commit(out, 2, baseF ++ aF))
       // writer B: v2 attempt fails -> rebase onto latest and retry
-      val bFirstTry = tryCommit(2, baseF ++ bF)
-      if (!bFirstTry) require(tryCommit(3, readManifest(2) ++ bF))
+      if (!Manifest.commit(out, 2, baseF ++ bF))
+        require(Manifest.commit(out, 3, Manifest.read(out, 2) ++ bF))
       def agg(v: Int): DataFrame =
-        s.read.parquet(readManifest(v): _*)
+        s.read.parquet(Manifest.read(out, v): _*)
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
@@ -479,7 +452,7 @@ object Lifecycle {
       agg(1).unionAll(agg(2)).unionAll(agg(3)).orderBy("version")
     }),
 
-    // ORPHAN-FILE GC (r7) — the crash-debris cleanup completing the
+    // ORPHAN-FILE GC — the crash-debris cleanup completing the
     // vacuum story: stage_acid_delete_vacuum reclaims files old
     // VERSIONS reference; this reclaims files NO manifest references
     // (failed writes, aborted tasks). GC plan = directory listing
@@ -489,30 +462,17 @@ object Lifecycle {
     // manifest store without touching a single data byte.
     "stage_orphan_file_gc" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("orphangc")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
       val o = Tables.orders(s, d)
-      val live = writeFiles(o.filter(col("o_orderkey") % 2 === 0), "live")
+      require(Manifest.commit(out, 1, Manifest.writeFiles(out,
+        o.filter(col("o_orderkey") % 2 === 0), "live")))
       // crash debris: files written but never committed to a manifest
-      val orphan1 = writeFiles(o.filter(col("o_orderkey") % 2 === 1), "tmp1")
-      val orphan2 = writeFiles(o.limit(0), "tmp2")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$out/manifest_v1.txt"),
-        live.mkString("\n"))
-      val manifest = java.nio.file.Files
-        .readString(java.nio.file.Paths.get(s"$out/manifest_v1.txt"))
-        .split("\n").toSet
-      val onDisk = new java.io.File(s"$out/data").listFiles()
-        .flatMap(d2 => Option(d2.listFiles()).getOrElse(Array()))
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+      Manifest.writeFiles(out, o.filter(col("o_orderkey") % 2 === 1), "tmp1")
+      Manifest.writeFiles(out, o.limit(0), "tmp2")
+      val manifest = Manifest.read(out, 1).toSet
+      val onDisk = new java.io.File(s"$out/data").listFiles().toSeq
+        .flatMap(dir => Manifest.files(dir.getPath))
       val orphans = onDisk.filterNot(manifest)
-      orphans.foreach(p => java.nio.file.Files.delete(
-        java.nio.file.Paths.get(p)))
+      orphans.foreach(p => Files.delete(Paths.get(p)))
       s.read.parquet(manifest.toSeq: _*)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
@@ -522,7 +482,7 @@ object Lifecycle {
         .orderBy("o_orderstatus")
     }),
 
-    // INCREMENTAL file-level read (r7) — the append-only "stream a
+    // INCREMENTAL file-level read — the append-only "stream a
     // table" primitive cheaper than full CDC: the consumer remembers
     // the last manifest it processed and reads ONLY files(v2) −
     // files(v1) — a metadata set-difference, zero data compared
@@ -532,16 +492,11 @@ object Lifecycle {
     // appended batch exactly.
     "stage_incremental_file_read" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("incread")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
       val o = Tables.orders(s, d)
-      val v1 = writeFiles(o.filter(col("o_orderkey") % 3 === 0), "b0")
-      val v2 = v1 ++ writeFiles(o.filter(col("o_orderkey") % 3 === 1), "b1")
+      val v1 = Manifest.writeFiles(out,
+        o.filter(col("o_orderkey") % 3 === 0), "b0")
+      val v2 = v1 ++ Manifest.writeFiles(out,
+        o.filter(col("o_orderkey") % 3 === 1), "b1")
       val increment = v2.diff(v1) // metadata-only determination
       s.read.parquet(increment: _*)
         .groupBy("o_orderstatus")
@@ -553,7 +508,7 @@ object Lifecycle {
         .orderBy("o_orderstatus")
     }),
 
-    // MERGE-ON-READ deletes (r7) — the deletion-vector/positional-
+    // MERGE-ON-READ deletes — the deletion-vector/positional-
     // delete strategy beside the CoW path (stage_acid_delete_vacuum
     // rewrites files immediately): a delete commit APPENDS a
     // tombstone sidecar (O(deleted keys), no data file touched);
@@ -593,7 +548,7 @@ object Lifecycle {
         .orderBy("state", "c_nationkey")
     }),
 
-    // SHALLOW CLONE (r7) — Delta's zero-copy table fork: the clone's
+    // SHALLOW CLONE — Delta's zero-copy table fork: the clone's
     // v1 manifest IS the source's file list (no data copied — a
     // metadata write, O(manifest) at any table size); subsequent
     // clone commits append files the source never sees. The declared
@@ -603,40 +558,30 @@ object Lifecycle {
     // is created in milliseconds.
     "stage_clone_shallow" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("shallowclone")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
-      def commit(name: String, files: Seq[String]): Unit =
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/$name.txt"), files.mkString("\n"))
-      def readTable(name: String): DataFrame = {
-        val files = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"$out/$name.txt"))
-          .split("\n").toSeq
-        s.read.parquet(files: _*)
-      }
+      // two tables, one shared data directory under `out`
+      val Seq(src, clone) = Seq("src", "clone")
+        .map(t => Files.createDirectories(Paths.get(out, t)).toString)
       val c = Tables.customer(s, d)
-      val srcFiles = writeFiles(c.filter(col("c_custkey") % 2 === 0), "src")
-      commit("src_v1", srcFiles)
-      commit("clone_v1", srcFiles) // shallow clone: same files, new ref
+      val srcFiles = Manifest.writeFiles(out,
+        c.filter(col("c_custkey") % 2 === 0), "src")
+      require(Manifest.commit(src, 1, srcFiles))
+      // shallow clone: same files, new ref
+      require(Manifest.commit(clone, 1, srcFiles))
       // the clone diverges: an experiment append lands only on the fork
-      commit("clone_v2", srcFiles ++
-        writeFiles(c.filter(col("c_custkey") % 2 === 1), "cloneadd"))
-      def agg(name: String, label: String): DataFrame =
-        readTable(name).agg(count(lit(1)).as("n"),
-          round(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"), 4)
-            .as("total"))
+      require(Manifest.commit(clone, 2, srcFiles ++ Manifest.writeFiles(out,
+        c.filter(col("c_custkey") % 2 === 1), "cloneadd")))
+      def agg(root: String, v: Int, label: String): DataFrame =
+        s.read.parquet(Manifest.read(root, v): _*)
+          .agg(count(lit(1)).as("n"),
+            round(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"), 4)
+              .as("total"))
           .select(lit(label).as("table_ref"), col("n"), col("total"))
-      agg("src_v1", "source_v1").unionAll(agg("clone_v1", "clone_v1"))
-        .unionAll(agg("clone_v2", "clone_v2"))
+      agg(src, 1, "source_v1").unionAll(agg(clone, 1, "clone_v1"))
+        .unionAll(agg(clone, 2, "clone_v2"))
         .orderBy("table_ref")
     }),
 
-    // Write-Audit-Publish (r7) — the staging WORKFLOW the manifest
+    // Write-Audit-Publish — the staging WORKFLOW the manifest
     // primitives exist for (the Iceberg/Netflix WAP pattern): each
     // batch lands as unpublished data files + a staged manifest, a DQ
     // audit runs AGAINST THE STAGED FILES (never the live table), and
@@ -654,14 +599,7 @@ object Lifecycle {
     // swaps — O(1) in table size.
     "stage_write_audit_publish" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("wap")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-      }
-      var published: Seq[String] = writeFiles(
+      var published: Seq[String] = Manifest.writeFiles(out,
         Tables.customer(s, d).filter(col("c_custkey") % 3 === 0), "base")
       // audit = zero balance-range violations over the STAGED batch
       def audit(files: Seq[String]): Long =
@@ -669,7 +607,7 @@ object Lifecycle {
           .filter(col("c_acctbal") < -1000 || col("c_acctbal") > 100000)
           .count()
       def stage(df: DataFrame, sub: String): (Seq[String], Long) = {
-        val files = writeFiles(df, sub)
+        val files = Manifest.writeFiles(out, df, sub)
         (files, audit(files))
       }
       val base = Tables.customer(s, d)
@@ -694,7 +632,7 @@ object Lifecycle {
       audits.unionByName(pub).orderBy("item")
     }),
 
-    // Change-data-feed between manifest snapshots (round 6) — the
+    // Change-data-feed between manifest snapshots — the
     // Delta-CDF primitive on the same scaffolding as
     // `stage_acid_merge`: rerun that key's v1→v2 MERGE commit, then
     // compute the ROW-LEVEL changelog by keyed full-outer join of the
@@ -711,14 +649,10 @@ object Lifecycle {
       // deterministic), then diff its two versions
       queries("stage_acid_merge")(s, d).count()
       val out = graft.sources.Staging.scratchPath("acidmerge")
-      def readVersion(version: Int): DataFrame =
-        s.read.parquet(java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"$out/manifest_v$version.txt"))
-          .split("\n").toSeq: _*)
-      val v1 = readVersion(1).select(col("c_custkey"),
-        col("c_nationkey").as("nk1"), col("c_acctbal").as("b1"))
-      val v2 = readVersion(2).select(col("c_custkey"),
-        col("c_nationkey").as("nk2"), col("c_acctbal").as("b2"))
+      def version(v: Int): DataFrame = s.read.parquet(Manifest.read(out, v): _*)
+        .select(col("c_custkey"), col("c_nationkey").as(s"nk$v"),
+          col("c_acctbal").as(s"b$v"))
+      val (v1, v2) = (version(1), version(2))
       v1.join(v2, Seq("c_custkey"), "full_outer")
         .withColumn("change_type",
           when(col("nk1").isNull, lit("insert"))
@@ -735,8 +669,8 @@ object Lifecycle {
         .orderBy("change_type", "nation")
     }),
 
-    // OPTIMIZE (small-file compaction) on the manifest mini-format
-    // (round 6) — the fourth table-format primitive, completing the
+    // OPTIMIZE (small-file compaction) on the manifest mini-format —
+    // the fourth table-format primitive, completing the
     // quartet (snapshot read / CoW MERGE / DELETE+VACUUM / OPTIMIZE):
     // v1 commits the fixture as 8 small shard files (the
     // many-small-files state every microbatch stager degrades into);
@@ -749,37 +683,24 @@ object Lifecycle {
     // the file count actually drops 8 → 1.
     "stage_manifest_compact" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("manifestcompact")
-      def listFiles(dir: String): Seq[String] =
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).sorted.toSeq
-      def commit(version: Int, files: Seq[String]): Unit =
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/manifest_v$version.txt"),
-          files.mkString("\n"))
-      def readVersion(version: Int): DataFrame =
-        s.read.parquet(java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"$out/manifest_v$version.txt"))
-          .split("\n").toSeq: _*)
+      def read(v: Int): DataFrame = s.read.parquet(Manifest.read(out, v): _*)
       val base = Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
       base.repartition(8).write.mode("overwrite").parquet(s"$out/data/small")
-      commit(1, listFiles(s"$out/data/small"))
-      readVersion(1).coalesce(1)
-        .write.mode("overwrite").parquet(s"$out/data/compact")
-      commit(2, listFiles(s"$out/data/compact"))
-      def agg(df: DataFrame, v: Int): DataFrame =
-        df.groupBy("s_nationkey")
+      require(Manifest.commit(out, 1, Manifest.files(s"$out/data/small")))
+      require(Manifest.commit(out, 2,
+        Manifest.writeFiles(out, read(1), "compact")))
+      def agg(v: Int): DataFrame =
+        read(v).groupBy("s_nationkey")
           .agg(count(lit(1)).as("n"),
             round(sum(col("s_acctbal").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
           .select(lit(v).as("version"), col("s_nationkey"), col("n"),
             col("total"))
-      agg(readVersion(1), 1).unionAll(agg(readVersion(2), 2))
-        .orderBy("version", "s_nationkey")
+      agg(1).unionAll(agg(2)).orderBy("version", "s_nationkey")
     }),
 
-    // DELETE + VACUUM on the manifest mini-format (round 6) — the
+    // DELETE + VACUUM on the manifest mini-format — the
     // third table-format primitive after snapshot reads
     // (`stage_time_travel`) and copy-on-write MERGE
     // (`stage_acid_merge`): a DELETE commit rewrites only the file
@@ -792,43 +713,25 @@ object Lifecycle {
     // unreferenced file) and proves v2 still reads afterwards.
     "stage_acid_delete_vacuum" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("aciddelete")
-      def writeFiles(df: DataFrame, sub: String): Seq[String] = {
-        val dir = s"$out/data/$sub"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).sorted.toSeq
-      }
-      def commit(version: Int, files: Seq[String]): Unit =
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/manifest_v$version.txt"),
-          files.mkString("\n"))
-      def readVersion(version: Int): DataFrame = {
-        val files = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"$out/manifest_v$version.txt"))
-          .split("\n").toSeq
-        s.read.parquet(files: _*)
-      }
       val base = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-      val v1Files = (0 to 3).flatMap(b =>
-        writeFiles(base.filter(pmod(col("c_custkey"), lit(4)) === b), s"b$b"))
-      commit(1, v1Files)
+      val v1Files = (0 to 3).flatMap(b => Manifest.writeFiles(out,
+        base.filter(pmod(col("c_custkey"), lit(4)) === b), s"b$b"))
+      require(Manifest.commit(out, 1, v1Files))
       // DELETE WHERE c_custkey % 8 = 0: only bucket 0 holds matches →
       // rewrite that one file without them
       val newB0 = base.filter(pmod(col("c_custkey"), lit(4)) === 0)
         .filter(!(col("c_custkey") % 8 === 0))
-      commit(2, v1Files.filterNot(_.contains("/b0/"))
-        ++ writeFiles(newB0, "b0_v2"))
-      def agg(df: DataFrame, v: Int): DataFrame =
-        df.groupBy("c_nationkey")
+      require(Manifest.commit(out, 2, v1Files.filterNot(_.contains("/b0/"))
+        ++ Manifest.writeFiles(out, newB0, "b0_v2")))
+      def agg(v: Int): DataFrame =
+        s.read.parquet(Manifest.read(out, v): _*).groupBy("c_nationkey")
           .agg(count(lit(1)).as("n"),
             round(sum(col("c_acctbal").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
           .select(lit(v).as("version"), col("c_nationkey"), col("n"),
             col("total"))
-      agg(readVersion(1), 1).unionAll(agg(readVersion(2), 2))
-        .orderBy("version", "c_nationkey")
+      agg(1).unionAll(agg(2)).orderBy("version", "c_nationkey")
     }),
 
     "sink_zorder_curve" -> ((s, d) => {
@@ -846,7 +749,7 @@ object Lifecycle {
         .orderBy("zbucket")
     }),
 
-    // Hilbert-curve layout (r14, VERDICT r13 gap #3) beside
+    // Hilbert-curve layout beside
     // sink_zorder_curve — same sink (curve-sorted parquet,
     // range-partitioned on the key) and the ADOPTION ARGUMENT
     // MEASURED, not asserted: per UNALIGNED 1000-cell curve bucket
@@ -859,7 +762,7 @@ object Lifecycle {
     // Hilbert for multi-dim clustering at high dimension/skew
     // (Faloutsos & Roseman 1989). Output: per curve, bucket count,
     // row count, total/avg/max bbox area — the avg ratio is the
-    // measured locality win the judge can read off one row pair.
+    // measured locality win, readable off one row pair.
     "sink_hilbert_curve" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("hilbert")
       // dense grid coordinates (x, y) = (pk mod 256, pk div 256 mod

@@ -43,7 +43,7 @@ object Streaming {
     // FileStreamSource requires a directory or glob, not a bare file
     // path — `events.*` matches exactly the fixture file and makes the
     // sf dir the inferred basePath.
-    // Session-scoped maxFilesPerTrigger knob (r15): production file
+    // Session-scoped maxFilesPerTrigger knob: production file
     // streams cap files per micro-batch exactly this way; the
     // out-of-order StreamingSpec sets it to 1 over a two-file fixture
     // to force the cross-batch arrival the NFA order guards exist for.
@@ -147,7 +147,7 @@ object Streaming {
           .orderBy("user_id")
       }),
 
-    // Streaming RAG ingest (r9): the chunk stage of
+    // Streaming RAG ingest: the chunk stage of
     // pipeline_chunk_embed_e2e as a STREAM — documents arrive as
     // files, each micro-batch chunks them (120/80 sliding geometry,
     // a stateless per-row generator: zero streaming state) and the
@@ -177,7 +177,7 @@ object Streaming {
         .orderBy("lang")
     }),
 
-    // Streaming ANN-index maintenance (r10, VERDICT r9 #8) — the
+    // Streaming ANN-index maintenance — the
     // production RAG freshness story: documents arrive as files;
     // each micro-batch (a) chunks them (120/80, the
     // text_chunk_sliding geometry), embeds the chunks as relational
@@ -261,7 +261,10 @@ object Streaming {
       val st = s.read.parquet(s"$stats/v$lastV")
       val nChunks = st.filter(col("dim") === -1L)
         .select(col("df").as("n_chunks"))
-      val full = s.read.parquet(s"$idx/b*")
+      // the b<batchId> directories, listed like `stats` above: a glob
+      // path would make the reader probe it as a literal directory
+      val full = s.read.parquet(new java.io.File(idx).listFiles()
+          .filter(_.getName.startsWith("b")).map(_.getPath): _*)
         .groupBy("dim").agg(count(lit(1)).as("df_full"))
       st.filter(col("dim") >= 0L)
         .join(full, Seq("dim"))
@@ -352,7 +355,7 @@ object Streaming {
         .orderBy("user_id")
     }),
 
-    // Streaming MATCH_RECOGNIZE funnel (r14) — the streaming
+    // Streaming MATCH_RECOGNIZE funnel — the streaming
     // counterpart of the batch pattern family (kstep/alternation/
     // kleene/negation): a per-user NFA carried in mapGroupsWithState.
     // Each micro-batch folds the user's new events IN TIME ORDER
@@ -382,7 +385,7 @@ object Streaming {
             // fast path; the sentinel keeps state 3 plain longs)
             var (s0, s1, s2) = st.getOption
               .getOrElse((Long.MinValue, Long.MinValue, Long.MinValue))
-            // `us >= sN` order guards (r15, VERDICT r14 #2): within a
+            // `us >= sN` order guards: within a
             // batch the sort makes them redundant (a running max is
             // always ≤ the current row's time), but an event arriving
             // in a LATER micro-batch with an EARLIER timestamp than
@@ -423,8 +426,8 @@ object Streaming {
           count(when(col("r2"), 1)).as("n_purchase"))
     }),
 
-    // Streaming MATCH_RECOGNIZE alternation (r15, VERDICT r14 cap #2)
-    // — `signup (view{≤12h} | click{≤4h}) purchase{≤8h}` as a
+    // Streaming MATCH_RECOGNIZE alternation —
+    // `signup (view{≤12h} | click{≤4h}) purchase{≤8h}` as a
     // per-user NFA: the automaton holds BOTH branch states (latest
     // in-deadline view, latest in-deadline click) and the purchase
     // transition keys off their max — the same greatest-carry
@@ -474,7 +477,7 @@ object Streaming {
           count(when(col("r2"), 1)).as("n_purchase"))
     }),
 
-    // Streaming MATCH_RECOGNIZE negation (r15) — `signup (!click)*
+    // Streaming MATCH_RECOGNIZE negation — `signup (!click)*
     // purchase{≤24h}`: the NFA carries the latest signup AND the
     // latest click; a deadline purchase is "pure" when no click
     // falls between its matched signup and itself (lastc unset or
@@ -519,7 +522,7 @@ object Streaming {
           sum(col("nd") - col("np")).as("n_tainted_purchases"))
     }),
 
-    // Streaming MATCH_RECOGNIZE Kleene-plus (r15) — `signup view+
+    // Streaming MATCH_RECOGNIZE Kleene-plus — `signup view+
     // purchase` with an 8 h intra-chain gap bound and a 12 h
     // chain-start deadline off the latest signup. The NFA carries
     // the CURRENT chain's validity (decided once, at its head, from
@@ -639,7 +642,7 @@ object Streaming {
     // where every arriving object is its own micro-batch). The
     // fingerprint is batch-boundary-invariant, so the oracle is the
     // plain batch SQL; StreamingSpec asserts >1 batch actually ran.
-    // Streaming QUALITY GATE (r7) — the curation funnel in motion:
+    // Streaming QUALITY GATE — the curation funnel in motion:
     // documents arrive in micro-batches and each batch splits into
     // accept/quarantine dirs on PER-ROW metrics (token count ≥ 30,
     // type-token ratio ≥ 0.5). The metrics are deliberately row-local
@@ -686,7 +689,7 @@ object Streaming {
         .orderBy("verdict", "lang")
     }),
 
-    // CDC APPLY (r7) — the streaming upsert-merge pattern: each
+    // CDC APPLY — the streaming upsert-merge pattern: each
     // micro-batch is a changelog chunk; foreachBatch folds it into a
     // keyed snapshot via full-outer merge of ASSOCIATIVE partials
     // (count-sum / decimal-sum / max), writing a new snapshot version
@@ -772,7 +775,7 @@ object Streaming {
         .orderBy("event_type")
     }),
 
-    // Exactly-once across a RESTART (round 6) — the property the
+    // Exactly-once across a RESTART — the property the
     // reference's S3-event staging actually depends on: a stream with
     // a checkpoint processes the first half of the fixture, drains,
     // then MORE files land and a NEW query restarts from the SAME
@@ -864,7 +867,7 @@ object Streaming {
     // batch 1 = RECENT half, batch 2 = OLD half (maxFilesPerTrigger=1
     // processes one file per micro-batch, oldest mod-time first).
     // Batch 1 advances the watermark to max(ts) − 30 min, hours past
-    // every batch-2 row. MEASURED Spark 4.1.2 behavior (r4): the
+    // every batch-2 row. MEASURED Spark 4.1.2 behavior: the
     // below-watermark batch-2 rows are NOT dropped on input
     // (numRowsDroppedByWatermark = 0); append mode admits them and
     // immediately emits their already-closed windows. So the engine-
@@ -1110,7 +1113,7 @@ object Streaming {
                 count(DISTINCT CASE WHEN st2 IS NOT NULL
                                     THEN user_id END) AS n_purchase
          FROM s2""",
-    // r15 pattern family: stream/batch parity BY CONSTRUCTION — each
+    // Pattern family: stream/batch parity BY CONSTRUCTION — each
     // oracle is the batch twin's carry-chain SQL, shared verbatim, so
     // the two compilations of the same pattern can never drift apart
     // without a hash mismatch.

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Governance
 
-/** Governance-operator tests: the DQ audit's per-rule verdicts, the
-  * write-audit-publish gate (both the veto and the publish path — the
-  * side effect the declared `dq_expectations` key deliberately does
-  * NOT perform), and the snapshot-diff / stats-manifest invariants
-  * cross-checked against direct batch computations. */
+/** Governance-operator tests: the DQ audit's per-rule verdicts (on
+  * the fixture and on a deduplicated batch) and the snapshot-diff /
+  * stats-manifest invariants cross-checked against direct batch
+  * computations. */
 class GovernanceSpec extends GraftSuite {
 
   test("dq_expectations: uniqueness rule vetoes, all other rules pass") {
@@ -28,11 +27,11 @@ class GovernanceSpec extends GraftSuite {
     }
   }
 
-  test("writeAuditPublish vetoes the dup fixture, publishes a clean batch") {
-    val vetoOut = graft.sources.Staging.tmpDir("dq_spec_veto") + "/pub"
-    assert(!Governance.writeAuditPublish(spark, sf, vetoOut))
-    assert(!new java.io.File(vetoOut).exists(),
-      "vetoed batch must not be staged")
+  test("dqAudit vetoes the dup fixture, passes a deduplicated batch") {
+    def failing(sfDir: String): Set[String] =
+      Governance.dqAudit(spark, sfDir).filter(!col("passed"))
+        .collect().map(_.getString(0)).toSet
+    assert(failing(sf) == Set("unique_line_key"))
 
     // clean sfDir: dedup the line key, keep orders for the FK rule
     val cleanSf = graft.sources.Staging.tmpDir("dq_spec_clean_sf")
@@ -41,10 +40,8 @@ class GovernanceSpec extends GraftSuite {
       .write.mode("overwrite").parquet(s"$cleanSf/lineitem.parquet")
     Tables.orders(spark, sf)
       .write.mode("overwrite").parquet(s"$cleanSf/orders.parquet")
-    val pubOut = graft.sources.Staging.tmpDir("dq_spec_pub") + "/pub"
-    assert(Governance.writeAuditPublish(spark, cleanSf, pubOut))
-    val expected = Tables.lineitem(spark, cleanSf).count()
-    assert(spark.read.parquet(pubOut).count() == expected)
+    assert(failing(cleanSf).isEmpty,
+      "every rule must pass on the deduplicated batch")
   }
 
   test("stage_snapshot_diff classes match the mutation recipe") {

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import graft.operators.Lifecycle
+import graft.operators.{Lifecycle, Manifest}
 
 /** Semantics + side-effect tests for the staged-table lifecycle ops. */
 class LifecycleSpec extends GraftSuite {
@@ -86,10 +86,7 @@ class LifecycleSpec extends GraftSuite {
   test("stage_acid_merge is copy-on-write: v2 re-references 3 of v1's 4 files") {
     val out = Lifecycle.queries("stage_acid_merge")(spark, sf).collect()
     val root = graft.sources.Staging.scratchPath("acidmerge")
-    def manifest(v: Int): Set[String] = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(s"$root/manifest_v$v.txt"))
-      .split("\n").toSet
-    val (v1, v2) = (manifest(1), manifest(2))
+    val Seq(v1, v2) = Seq(1, 2).map(Manifest.read(root, _).toSet)
     assert(v1.size == 4, s"v1 must hold 4 bucket files, got ${v1.size}")
     assert((v1 intersect v2).size == 3,
       "MERGE must re-reference exactly the 3 untouched bucket files")
@@ -116,10 +113,7 @@ class LifecycleSpec extends GraftSuite {
     // vacuum: exactly ONE data file (the superseded b0) is no longer
     // referenced by the latest manifest; removing it must not affect v2
     val root = graft.sources.Staging.scratchPath("aciddelete")
-    def manifest(v: Int): Set[String] = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(s"$root/manifest_v$v.txt"))
-      .split("\n").toSet
-    val live = manifest(2)
+    val live = Manifest.read(root, 2).toSet
     val onDisk = java.nio.file.Files.walk(
         java.nio.file.Paths.get(s"$root/data"))
       .filter(p => p.toString.endsWith(".parquet"))
@@ -136,11 +130,10 @@ class LifecycleSpec extends GraftSuite {
   test("stage_manifest_compact: 8 files become 1, both versions identical") {
     val out = Lifecycle.queries("stage_manifest_compact")(spark, sf).collect()
     val root = graft.sources.Staging.scratchPath("manifestcompact")
-    def manifest(v: Int): Seq[String] = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(s"$root/manifest_v$v.txt"))
-      .split("\n").toSeq
-    assert(manifest(1).length == 8, "v1 must hold the 8 small shards")
-    assert(manifest(2).length == 1, "OPTIMIZE must compact to one file")
+    assert(Manifest.read(root, 1).length == 8,
+      "v1 must hold the 8 small shards")
+    assert(Manifest.read(root, 2).length == 1,
+      "OPTIMIZE must compact to one file")
     val v1 = out.filter(_.getInt(0) == 1)
       .map(r => (r.getAs[Number](1).longValue(), r.getLong(2)))
     val v2 = out.filter(_.getInt(0) == 2)
@@ -158,10 +151,7 @@ class LifecycleSpec extends GraftSuite {
       "AS OF v1 must see exactly the v1 commit")
     // the v2 manifest covers both commits — the "current" read
     val out = graft.sources.Staging.scratchPath("timetravel")
-    val v2Files = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(s"$out/manifest_v2.txt"))
-      .split("\n").toSeq
-    val v2Rows = spark.read.parquet(v2Files: _*).count()
+    val v2Rows = spark.read.parquet(Manifest.read(out, 2): _*).count()
     assert(v2Rows ==
       base.filter(col("o_orderkey") % 3 === 0 ||
         col("o_orderkey") % 3 === 1).count(),

@@ -39,15 +39,6 @@ class Round8Spec extends GraftSuite {
       s"events.ts year range ${yr.mkString("-")} looks mis-scaled")
   }
 
-  test("eventsRawNanos yields Long nanos consistent with Tables.events") {
-    val micro = Tables.events(spark, sf)
-      .agg(min(unix_micros(col("ts")))).collect()(0).getLong(0)
-    val nano = Tables.eventsRawNanos(spark, sf)
-      .agg(min(col("ts"))).collect()(0).getLong(0)
-    assert(nano / 1000L == micro,
-      s"raw-nanos min $nano does not reduce to micros min $micro")
-  }
-
   test("dedup_semantic_cluster: per-cell audit is conserved and bounded") {
     val out = SparkEntry.queries("dedup_semantic_cluster")(spark, sf).collect()
     assert(out.length == 16, "one row per centroid cell")
