@@ -1,11 +1,10 @@
 package graft
 
 /** Shared parser for BASELINE.md's "## rNN per-query seconds" anchor
-  * tables (ADVICE r13: Bench.scala and RelationalCoreSpec carried
-  * copies of the section/row regexes and different cwd fallbacks —
-  * a format change could silently split the runtime drift gate from
-  * the completeness test). Single source of truth: Bench consumes
-  * [[anchorsFor]] (env-filtered values), the spec consumes
+  * tables, so a format change cannot split the runtime drift gate
+  * from the completeness test (copies of the section/row regexes
+  * with different cwd fallbacks once did). Bench consumes
+  * [[anchorsFor]] (env-filtered values), RelationalCoreSpec consumes
   * [[latestKeys]] (key completeness, deliberately env-agnostic —
   * a key must be anchored no matter which box anchored it).
   */
@@ -27,10 +26,15 @@ private[graft] object BaselineAnchors {
     else None
   }
 
-  /** The highest-numbered per-query anchor section, if any. */
-  def latestSection(text: String): Option[String] =
+  /** (round, section text) of every per-query anchor section, in
+    * round order. */
+  private def sections(text: String): Seq[(Int, String)] =
     sectRe.findAllMatchIn(text).toSeq
-      .sortBy(_.group(1).toInt).lastOption.map(_.group(0))
+      .map(m => m.group(1).toInt -> m.group(0)).sortBy(_._1)
+
+  /** The highest round number among the anchor sections, if any. */
+  def latestRound(text: String): Option[Int] =
+    sections(text).lastOption.map(_._1)
 
   /** key → anchor seconds rows of one section. */
   def rows(section: String): Map[String, Double] =
@@ -46,23 +50,23 @@ private[graft] object BaselineAnchors {
       e.group(1) == cpus &&
         sfDir.stripSuffix("/").endsWith(e.group(2)))
 
-  /** Env-filtered anchors for the drift gate (Bench): the LATEST
-    * section whose header matches this run's env — not merely the
-    * latest section overall. r16 anchors the board at BOTH 32 and 8
-    * cores (VERDICT r15 #1), so one round now contributes two
+  /** Env-filtered anchors for the drift gate (Bench): the round and
+    * rows of the LATEST section whose header matches this run's env —
+    * not merely the latest section overall. One round can anchor the
+    * board at several core counts (32 and 8), so it contributes
     * same-numbered sections and the gate must pick the matching one
-    * instead of disarming whenever the other env's table happens to
-    * sit last in the file. */
-  def anchorsFor(cpus: String, sfDir: String): Map[String, Double] =
-    readText().map { text =>
-      sectRe.findAllMatchIn(text).toSeq
-        .sortBy(_.group(1).toInt).map(_.group(0))
-        .filter(envMatches(_, cpus, sfDir))
-        .lastOption.map(rows).getOrElse(Map.empty[String, Double])
-    }.getOrElse(Map.empty)
+    * instead of disarming whenever another env's table happens to sit
+    * last in the file. None = no section matches. */
+  def anchorsFor(text: String, cpus: String,
+      sfDir: String): Option[(Int, Map[String, Double])] =
+    sections(text).filter(x => envMatches(x._2, cpus, sfDir)).lastOption
+      .map { case (round, section) => round -> rows(section) }
 
-  /** All keys in the latest anchor table, env-agnostic (the
-    * completeness gate in RelationalCoreSpec). None = no table. */
-  def latestKeys(): Option[Set[String]] =
-    readText().flatMap(latestSection).map(rows(_).keySet)
+  /** Every key anchored in the newest round, env-agnostic (the
+    * completeness gate in RelationalCoreSpec): the union over all of
+    * that round's sections, since one round may split the board's
+    * envs across several tables. None = no table. */
+  def latestKeys(text: String): Option[Set[String]] =
+    latestRound(text).map(n =>
+      sections(text).filter(_._1 == n).flatMap(x => rows(x._2).keySet).toSet)
 }

@@ -25,7 +25,7 @@ object Bench {
         .selectExpr("count(*)").collect()
       // warm the parquet WRITE path too (committer + write codegen +
       // output FS init, ~1.7 s): otherwise whichever write-key the map
-      // iterates first absorbs it — r5's key reshuffle moved that cost
+      // iterates first absorbs it — one key reshuffle moved that cost
       // onto scan_partition_pruned (0.9 -> 2.5 s with identical code)
       val wtmp = java.nio.file.Files
         .createTempDirectory("graft_bench_warm").toString
@@ -35,7 +35,7 @@ object Bench {
       // warm the STRUCTURED STREAMING machinery too (state-store
       // provider load, streaming-query planner, checkpoint FS init,
       // ~2 s): otherwise whichever streaming key the map iterates
-      // first absorbs it — r6's key additions re-hashed the order and
+      // first absorbs it — once, new keys re-hashed the order and
       // stream_dedup_within_watermark jumped 1.7 -> 3.7 s in the
       // driver run with identical code (isolation-cold reproduces
       // 3.6-4.3 s; warm, the key is ~1.5 s). A watermark + stateful
@@ -63,7 +63,7 @@ object Bench {
         spark.catalog.dropTempView("graft_warm_stream")
         // second streaming init shape: the SYMMETRIC-HASH-JOIN state
         // store (stream-stream joins) loads a different provider path
-        // than the agg/dedup store warmed above — an r8 board run showed
+        // than the agg/dedup store warmed above — one board run showed
         // stream_stream_left_outer at 8.8 s (idle anchor ~3 s) because
         // whichever stream-stream key ran first absorbed that init.
         val jq = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
@@ -82,7 +82,7 @@ object Bench {
       }
       // unigram-fit shape: eager localCheckpoint of a token-count
       // synopsis + a broadcast scoring join — text_perplexity_buckets
-      // ran 5.1× its anchor in the r8 driver bench when it was the
+      // ran 5.1× its anchor in a driver bench when it was the
       // first key to pay checkpoint-dir + broadcast-exchange init.
       // Runs the fit shape at FULL volume over the REAL documents
       // table: parquet footer, split/explode codegen, AND the JIT
@@ -108,15 +108,15 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(ks =>
       SparkEntry.queries.filter { case (k, _) => ks(k) })
-    // A failed key must be LOUD: r7's fixture-schema flip (events.ts
+    // A failed key must be LOUD: a fixture-schema flip (events.ts
     // INT64-nanos → timestamp[us]) errored 65 keys instantly and the
     // old silent `catch => -1L` recorded them as ~0.06 s "speedups".
     // Errors are now collected and emitted in the JSON line.
     // An errored key contributes NO timing: time-to-error is not a
     // measurement, and summing it into `value` (or leaving it in
     // `queries`) lets downstream comparisons mistake a crash for a
-    // speedup — the exact r7 confusion. Errored keys appear ONLY in
-    // n_errors/error_keys.
+    // speedup — the confusion that flip caused. Errored keys appear
+    // ONLY in n_errors/error_keys.
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     def timeKey(name: String, fn: (SparkSession, String) => DataFrame,
                 recordError: Boolean = true): Option[Double] = {
@@ -133,8 +133,8 @@ object Bench {
     val firstPass = selected.flatMap { case (name, fn) =>
       timeKey(name, fn).map(name -> _)
     }
-    // Drift gate (VERDICT r9 #2): the r9 driver bench recorded a
-    // 1.55×-contended run as the round's official number while a clean
+    // Drift gate: a driver bench once recorded a 1.55×-contended run
+    // as the round's official number while a clean
     // same-tree anchor sat in BASELINE.md. Now the bench itself parses
     // the latest "## rNN per-query seconds" anchor table, RE-RUNS every
     // key over 2× its anchor (>0.4 s absolute — the box's JVM-noise
@@ -144,11 +144,20 @@ object Bench {
     // flag in the JSON line so the recorded number is either
     // drift-clean or self-explaining. Anchor parse is best-effort: no
     // BASELINE.md (driver may run from a bare checkout) → skip.
-    // Parse shared with RelationalCoreSpec via BaselineAnchors
-    // (ADVICE r13) — env filter documented there: anchors from a
-    // different machine shape or fixture scale disarm the gate.
+    // Parse shared with RelationalCoreSpec via BaselineAnchors — env
+    // filter documented there: anchors from a different machine shape
+    // or fixture scale disarm the gate. Anchors from an older round
+    // than the newest table still arm it, and say so on stderr.
     val anchors: Map[String, Double] =
-      try BaselineAnchors.anchorsFor(cpus, sfDir)
+      try BaselineAnchors.readText().flatMap { text =>
+        BaselineAnchors.anchorsFor(text, cpus, sfDir).map {
+          case (round, rows) =>
+            BaselineAnchors.latestRound(text).filter(_ > round).foreach(n =>
+              System.err.println(s"[bench] drift anchors come from the " +
+                s"r$round table; the newest anchor table is r$n"))
+            rows
+        }
+      }.getOrElse(Map.empty)
       catch { case _: Throwable => Map.empty }
     val flagged = firstPass.filter { case (k, v) =>
       anchors.get(k).exists(a => v > 2.0 * a && v - a > 0.4) }
@@ -178,9 +187,9 @@ object Bench {
             ",\"run1\":" + r3(v) + ",\"rerun\":" +
             reruns.get(k).map(r3).getOrElse("null") + "}" }
         .mkString(",") + "}"
-    // Anchor-table completeness (r13, VERDICT r12 #2): the r11 guard
-    // caught partial RUNS but not a partial anchor TABLE — two r12
-    // keys were committed after the "final records" commit with no
+    // Anchor-table completeness: the partial-run guard below caught
+    // partial RUNS but not a partial anchor TABLE — two keys were
+    // once committed after the "final records" commit with no
     // anchor row, so drift.py could not gate them. When the drift gate
     // is armed (anchor table parsed and env-matched), a full-board run
     // whose anchor key set ≠ the registered board is reported in the
@@ -198,13 +207,12 @@ object Bench {
     val line = s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":$qs,"n_queries":${results.size},$driftJson,$gapJson,$errJson,"value":${r3(total)}}"""
     println(line)
     // the driver keeps only the TAIL of stdout and has twice recorded
-    // "parsed": null after truncation ate the line (r3, r4) — persist
+    // "parsed": null after truncation ate the line — persist
     // the full JSON to a file too so the numbers survive regardless.
     // Anchored to SPARK_GRAFT_BENCH_OUT or the repo root (not cwd —
     // launched elsewhere the record would silently land in the wrong
     // directory), and failures are logged, not swallowed.
-    // Record-hygiene guard (r11, ADVICE r9+r10 medium, twice
-    // recurred): a targeted subset run (SPARK_GRAFT_ONLY set) must
+    // Record-hygiene guard (the fault recurred twice): a targeted subset run (SPARK_GRAFT_ONLY set) must
     // NEVER clobber the full-board BENCH_SELF.json record — it lands
     // in BENCH_TARGETED.json unless an explicit SPARK_GRAFT_BENCH_OUT
     // overrides. Belt-and-braces: even without SPARK_GRAFT_ONLY, a

@@ -116,15 +116,19 @@ object GraftFunctions {
   val pqCodesBuilder: Seq[Expression] => Expression =
     exprs => PqAssignCodes(exprs(0), exprs(1))
 
+  /** Registers each kernel the session lacks. Keys call this during
+    * construction because a plain session has no [[GraftExtensions]];
+    * checking first keeps the repeat calls from replacing (and
+    * logging a WARN for) a registration that is already there. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("cosine_sim", cosineSimBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("hamming_bits", hammingBitsBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("lsh_sigs", lshSigsBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("pq_codes", pqCodesBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    Seq("cosine_sim" -> cosineSimBuilder, "hamming_bits" -> hammingBitsBuilder,
+        "lsh_sigs" -> lshSigsBuilder, "pq_codes" -> pqCodesBuilder)
+      .foreach { case (name, builder) =>
+        if (!registry.functionExists(
+            org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+          registry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
   }
 }
 

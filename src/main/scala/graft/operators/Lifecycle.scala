@@ -71,6 +71,30 @@ private[graft] object Manifest {
 object Lifecycle {
   type Q = (SparkSession, String) => DataFrame
 
+  /** The copy-on-write MERGE fixture of `stage_acid_merge` under
+    * `out`: v1 commits `customer` as 4 bucket files (c_custkey % 4);
+    * v2 rewrites bucket 0 with acctbal+100 where c_custkey % 8 = 0
+    * (only bucket 0 holds such keys, so only its file changes), adds an insert file of mirrored rows for c_custkey % 8 = 3, and
+    * re-references the 3 untouched bucket files. */
+  private def mergeFixture(s: SparkSession, d: String, out: String): Unit = {
+    val base = Tables.customer(s, d)
+      .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
+    val v1Files = (0 to 3).flatMap(b => Manifest.writeFiles(out,
+      base.filter(pmod(col("c_custkey"), lit(4)) === b), s"b$b"))
+    require(Manifest.commit(out, 1, v1Files))
+    val newB0 = base.filter(pmod(col("c_custkey"), lit(4)) === 0)
+      .withColumn("c_acctbal",
+        when(col("c_custkey") % 8 === 0, col("c_acctbal") + 100)
+          .otherwise(col("c_acctbal")))
+    val inserts = base.filter(col("c_custkey") % 8 === 3)
+      .select((-col("c_custkey")).as("c_custkey"), col("c_nationkey"),
+        lit(7.77).as("c_acctbal"))
+    val untouched = v1Files.filterNot(_.contains("/b0/"))
+    require(Manifest.commit(out, 2, untouched
+      ++ Manifest.writeFiles(out, newB0, "b0_v2")
+      ++ Manifest.writeFiles(out, inserts, "ins_v2")))
+  }
+
   /** Spread the low 8 bits of `c` to even bit positions (morton
     * encode step): 3 shift-or-mask rounds, all codegen'd. Input is
     * masked to 8 bits first — wider values would otherwise leak high
@@ -315,26 +339,7 @@ object Lifecycle {
     // asserts v2's manifest re-references 3 of v1's 4 files.
     "stage_acid_merge" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("acidmerge")
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-      // v1: 4 bucket files
-      val v1Files = (0 to 3).flatMap(b => Manifest.writeFiles(out,
-        base.filter(pmod(col("c_custkey"), lit(4)) === b), s"b$b"))
-      require(Manifest.commit(out, 1, v1Files))
-      // MERGE: update acctbal+100 where c_custkey % 8 = 0 (bucket 0
-      // only → rewrite exactly that file), insert mirrored rows for
-      // c_custkey % 8 = 3
-      val newB0 = base.filter(pmod(col("c_custkey"), lit(4)) === 0)
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % 8 === 0, col("c_acctbal") + 100)
-            .otherwise(col("c_acctbal")))
-      val inserts = base.filter(col("c_custkey") % 8 === 3)
-        .select((-col("c_custkey")).as("c_custkey"), col("c_nationkey"),
-          lit(7.77).as("c_acctbal"))
-      val untouched = v1Files.filterNot(_.contains("/b0/"))
-      require(Manifest.commit(out, 2, untouched
-        ++ Manifest.writeFiles(out, newB0, "b0_v2")
-        ++ Manifest.writeFiles(out, inserts, "ins_v2")))
+      mergeFixture(s, d, out)
       def agg(v: Int): DataFrame =
         s.read.parquet(Manifest.read(out, v): _*).groupBy("c_nationkey")
           .agg(count(lit(1)).as("n"),
@@ -634,7 +639,7 @@ object Lifecycle {
 
     // Change-data-feed between manifest snapshots — the
     // Delta-CDF primitive on the same scaffolding as
-    // `stage_acid_merge`: rerun that key's v1→v2 MERGE commit, then
+    // `stage_acid_merge`: build that key's v1→v2 MERGE commit, then
     // compute the ROW-LEVEL changelog by keyed full-outer join of the
     // two snapshot reads: insert (new key), update_post (key present
     // in both, payload changed), and the unchanged majority dropped.
@@ -645,10 +650,11 @@ object Lifecycle {
     // change_type × nation counts + summed balance delta,
     // hash-checked against the oracle's recomputed changelog.
     "stage_manifest_cdc" -> ((s, d) => {
-      // rebuild the merge fixture (tmpDir pre-cleans, so reruns are
-      // deterministic), then diff its two versions
-      queries("stage_acid_merge")(s, d).count()
-      val out = graft.sources.Staging.scratchPath("acidmerge")
+      // build the merge fixture in this key's own directory (tmpDir
+      // pre-cleans, so reruns are deterministic), then diff its two
+      // versions
+      val out = graft.sources.Staging.tmpDir("manifestcdc")
+      mergeFixture(s, d, out)
       def version(v: Int): DataFrame = s.read.parquet(Manifest.read(out, v): _*)
         .select(col("c_custkey"), col("c_nationkey").as(s"nk$v"),
           col("c_acctbal").as(s"b$v"))

@@ -154,7 +154,7 @@ class PlanShapeSpec extends GraftSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"pagerank join degenerated:\n$plan")
-    // r15: the degree-joined edge list is localCheckpoint'ed once
+    // the degree-joined edge list is localCheckpoint'ed once
     // (the union-of-projections edge shape defeated exchange reuse —
     // the executed plan carried 28 lineitem scans); the 3 unrolled
     // iterations must consume that materialization (LogicalRDD), so
@@ -167,7 +167,7 @@ class PlanShapeSpec extends GraftSuite {
   }
 
   test("sim_lsh_ann signature projection is codegen'd, not a ScalaUDF") {
-    // r6: the LshSignatures expression replaced the Seq[Float]-boxing
+    // the LshSignatures expression replaced the Seq[Float]-boxing
     // UDF — the plan must carry the native lsh_sigs call and no UDF
     // invoke in the signature projection
     val plan = executedPlan("sim_lsh_ann")
@@ -180,7 +180,7 @@ class PlanShapeSpec extends GraftSuite {
     // below the join onto the documents scan and (b) INFER the
     // equivalent vec_id % 50 predicate onto the embeddings scan via
     // the join-key constraint — without (b) the embeddings side scans
-    // 50x the rows it needs (driver r6 watch item; isolation-bench
+    // 50x the rows it needs (a driver watch item; isolation-bench
     // 0.87 s flat, the 1.22 s driver sample was ordering noise)
     val plan = executedPlan("multimodal_features")
       .split("== Initial Plan ==")(0)
@@ -213,14 +213,14 @@ class PlanShapeSpec extends GraftSuite {
     assert("Generate explode".r.findAllIn(plan).size == 1,
       s"span explode duplicated:\n$plan")
     assert(!plan.contains("Join"), s"join crept back into span dedup:\n$plan")
-    // r13 (ShuffleAudit): the span-hash frame crosses the wire ONCE —
+    // the span-hash frame crosses the wire ONCE (see ShuffleAudit) —
     // the explicit repartition(h) serves both the (h, doc_id)
     // aggregate and the h window, so the only hash exchanges are the
-    // span repartition + the final doc-grain census (the r7 shape
+    // span repartition + the final doc-grain census (an earlier shape
     // shuffled the span frame twice: 17.5 MB for a 1.4 MB corpus)
     assert(plan.contains("REPARTITION_BY_COL"),
       s"span-hash repartition missing:\n$plan")
-    // invariant, not a literal (ADVICE r13): the guarded regression
+    // invariant, not a literal: the guarded regression
     // is the span frame crossing the wire TWICE — at most 2 hash
     // exchanges total (span repartition + doc census); fewer is fine
     val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).size
@@ -231,8 +231,8 @@ class PlanShapeSpec extends GraftSuite {
 
   test("LshSignatures generated Java actually compiles and matches eval") {
     // The plan-string grep above can pass even when janino rejects the
-    // generated code and the stage silently runs interpreted (the r6
-    // bug: Object→ArrayData assignment). Compile the expression
+    // generated code and the stage silently runs interpreted (an
+    // earlier bug: Object→ArrayData assignment). Compile the expression
     // DIRECTLY — GenerateUnsafeProjection throws on a janino failure,
     // no fallback — and check the compiled path agrees with eval().
     import org.apache.spark.sql.catalyst.InternalRow
@@ -305,7 +305,7 @@ class PlanShapeSpec extends GraftSuite {
   }
 
   test("unigram-LM scorer: pinned vocab broadcast, one scan, one explode") {
-    // The r8 verdict's only flagged skew hazard: an unpinned
+    // A flagged skew hazard: an unpinned
     // vocab join would fall back to a token-frame shuffle keyed on
     // Zipf-skewed tokens at 100 TB. The fix is structural — assert it.
     for (k <- Seq("text_unigram_logprob", "text_perplexity_buckets")) {
@@ -410,11 +410,11 @@ class PlanShapeSpec extends GraftSuite {
       s"no unbroadcast cartesian allowed in the FINAL plan:\n$plan")
   }
 
-  // ==== r10: no single-partition window over table-proportional ====
-  // input anywhere (VERDICT r9 #1). A global window — one whose
-  // partitionSpec is empty after optimization (partitionBy(lit(1))
-  // constant-folds to empty) — moves ALL rows to one task. The four
-  // r9 keys that carried one over table-grain input now ship their
+  // ==== no single-partition window over table-proportional input ====
+  // anywhere. A global window — one whose partitionSpec is empty
+  // after optimization (partitionBy(lit(1)) constant-folds to empty)
+  // — moves ALL rows to one task. The four keys that once carried
+  // one over table-grain input now ship their
   // documented per-partition/aggregate forms; these pins make the
   // shapes regression-proof: any global window that survives must be
   // provably synopsis-grain.
@@ -564,7 +564,7 @@ class PlanShapeSpec extends GraftSuite {
   }
 
   /** Forced-hint census of a key's ANALYZED plan — the logical hints
-    * the author wrote, before AQE/optimizer decisions. The r11 hint
+    * the author wrote, before AQE/optimizer decisions. The hint
     * policy (Tables.scala) is about what is FORCED, not what the
     * runtime picks: AQE converting a small shuffle to a broadcast at
     * test scale is exactly the size-checked behavior the policy wants,
@@ -580,13 +580,13 @@ class PlanShapeSpec extends GraftSuite {
     "slice and the idf synopsis is vocab-grain/Heaps-law — only " +
     "provably bounded synopses may keep hints)") {
     // bm25Pairs hints ONLY the 1-row (nc, avgdl) corpus synopsis —
-    // since the r15 rare-term backstop it is crossJoined on both the
+    // since the rare-term backstop it is crossJoined on both the
     // cut branch and the backstop branch, so pin the POLICY (every
     // hint sits on the synopsis) rather than a fragile node count.
     // probes (%97 slice), dfKeep (vocab-grain) and the
     // candidate-length join are hint-free.
     //
-    // r15 session 4: the declared keys END-PIN the pair frames
+    // the declared keys END-PIN the pair frames
     // (eager checkpoint + synopsis free), so the keys' analyzed
     // trees root at a LogicalRDD and no longer show the authored
     // hints — the audit therefore pins the LAZY pair builders
@@ -625,9 +625,8 @@ class PlanShapeSpec extends GraftSuite {
   }
 
   /** True iff this forced hint's subtree reaches an sf-scaling table
-    * scan. Detection is by leaf OUTPUT ATTRIBUTE NAMES (r12, ADVICE
-    * r11 medium): logical leaves stringify as `Relation [c_custkey#…]
-    * parquet` with no table name, so `toString.contains("customer")`
+    * scan. Detection is by leaf OUTPUT ATTRIBUTE NAMES: logical
+    * leaves stringify as `Relation [c_custkey#…] parquet` with no table name, so `toString.contains("customer")`
     * never matches and a path-string check was vacuous. Attribute
     * names are stable table fingerprints — the analyzed (pre-pruning)
     * leaf carries the full fixture schema, so the key columns of every
@@ -680,7 +679,7 @@ class PlanShapeSpec extends GraftSuite {
   test("sf-scaling dimension joins carry no forced broadcast hints " +
     "(r11 hint-policy audit, VERDICT r10 #3: customer/supplier grow " +
     "linearly with sf — AQE's size check decides at runtime)") {
-    // Negative control FIRST (r12, ADVICE r11): a deliberately forced
+    // Negative control FIRST: a deliberately forced
     // broadcast(customer) join must be flagged by the detector, or the
     // audit below proves nothing.
     val control = broadcast(graft.Tables.customer(spark, sf))
@@ -692,8 +691,8 @@ class PlanShapeSpec extends GraftSuite {
     assert(controlHints.nonEmpty && controlHints.exists(hintsSfScalingTable),
       "negative control failed: detector did not flag a forced " +
         "broadcast(customer) — the audit would be vacuous")
-    // Second negative control (r13, ADVICE r12): an sf-scaling
-    // NON-TPCH table — embeddings keys on vec_id, and the r12 detector
+    // Second negative control: an sf-scaling
+    // NON-TPCH table — embeddings keys on vec_id, and an earlier detector
     // listed a column name ("emb_id") that does not exist in the
     // fixture schema, so embedding-side hints were structurally
     // unflaggable. Force broadcast(embeddings) and require a flag.
@@ -720,7 +719,7 @@ class PlanShapeSpec extends GraftSuite {
       "analytics_mann_whitney", "analytics_chi2_independence",
       "window_pattern_vshape", "timeseries_sax_words",
       "feature_target_encode", "pipeline_feature_e2e",
-      // r12: the one site the r11 grep missed — broadcast() wrapped a
+      // the one site the first grep missed — broadcast() wrapped a
       // derived projection of orders/customer/part, not Tables.* —
       // now hint-free and pinned here
       "dq_referential_integrity")
@@ -728,21 +727,21 @@ class PlanShapeSpec extends GraftSuite {
       val bad = resolvedHints(k).filter(hintsSfScalingTable)
       assert(bad.isEmpty,
         s"$k: forced broadcast hint on an sf-scaling table — the " +
-          s"r11 policy (Tables.scala) reserves hints for frames with " +
+          s"hint policy (Tables.scala) reserves hints for frames with " +
           s"a size contract independent of corpus size")
     }
   }
 
-  test("board-wide standing audit (r14, VERDICT r13 #1): every global " +
-      "logical Window rides a bounded synopsis-grain frame — no " +
-      "unpartitioned WindowExec over table-proportional input") {
-    // The scale-killer class r10 built ScaleRank for: a Window with
+  test("board-wide standing audit: every global logical Window rides " +
+      "a bounded synopsis-grain frame — no unpartitioned WindowExec " +
+      "over table-proportional input") {
+    // The scale-killer class ScaleRank exists for: a Window with
     // an empty (or all-foldable, e.g. lit(1)) partitionSpec moves its
     // ENTIRE input onto one partition. That is only acceptable when
     // the frame is bounded by something other than the data volume.
     // This audit walks EVERY registered key's optimized logical plan
     // and requires any key containing a global Window to appear in
-    // the exemption list below with its grain bound; exact set
+    // WindowAudit.exemptions with its grain bound; exact set
     // equality both ways keeps the list honest (no stale entries).
     //
     // Frames materialized by an eager localCheckpoint during key
@@ -750,61 +749,23 @@ class PlanShapeSpec extends GraftSuite {
     // already-executed iterative rounds are invisible to this logical
     // walk. The PHYSICAL sweep (WindowAudit) closes that blind spot in
     // the same pass: its listener sees every execution that `fn`
-    // runs, checkpoint interiors included. Both read the exemption
-    // map from main scope so they can never disagree about what is
-    // exempt.
-    val exempt: Map[String, String] = WindowAudit.exemptions
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    // runs, checkpoint interiors included, and the swept keys'
+    // collects. Both read the exemption map from main scope so they
+    // can never disagree about what is exempt.
+    //
     // The same pass checks that every key is hermetic: constructing it
     // leaves the session's SQL conf, temp views and temp functions
     // exactly as it found them (SessionScope), so no key can change
-    // what a later key sees.
-    def views(): Set[String] = spark.catalog.listTables().collect()
-      .filter(_.isTemporary).map(_.name).toSet
-    // SessionCatalog's list, not spark.catalog.listFunctions(): that
-    // builds a Function record for each of the ~500 built-ins on every
-    // call, which took about a third of this pass's time
-    def tempFunctions(): Set[String] =
-      spark.sessionState.catalog.listTemporaryFunctions().map(_.funcName).toSet
-    def diff(kind: String, before: Set[String], after: Set[String]) =
-      (after -- before).toSeq.sorted.map(s"+$kind " + _) ++
-        (before -- after).toSeq.sorted.map(s"-$kind " + _)
-    // the graft kernels are session-wide registrations that many keys
-    // repeat, so they belong to the baseline
-    graft.functions.GraftFunctions.register(spark)
-    val residue = Seq.newBuilder[String]
-    WindowAudit.findings.clear()
-    val sweep = WindowAudit.register(spark)
-    val flagged = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (k, fn) =>
-        val (conf0, views0, fns0) =
-          (spark.conf.getAll, views(), tempFunctions())
-        WindowAudit.currentKey = k
-        val df = fn(spark, sf)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        val (conf1, views1, fns1) =
-          (spark.conf.getAll, views(), tempFunctions())
-        val confDiff = (conf0.keySet ++ conf1.keySet).toSeq.sorted
-          .filter(c => conf0.get(c) != conf1.get(c))
-          .map(c => s"$c: ${conf0.getOrElse(c, "<unset>")} -> " +
-            conf1.getOrElse(c, "<unset>"))
-        val stateDiff = confDiff ++ diff("view", views0, views1) ++
-          diff("function", fns0, fns1)
-        if (stateDiff.nonEmpty)
-          residue += s"$k: ${stateDiff.mkString(", ")}"
-        val n = df.queryExecution.optimizedPlan.collect {
-          case w: LWindow
-            if w.partitionSpec.isEmpty ||
-              w.partitionSpec.forall(_.foldable) => w
-        }.size
-        if (n > 0) Some(k) else None
-    }.toSet
-    finally spark.listenerManager.unregister(sweep)
-    val leaks = residue.result()
+    // what a later key sees. All three checks read the shared board
+    // construction in BoardPass.
+    val exempt: Map[String, String] = WindowAudit.exemptions
+    val pass = BoardPass.record
+    val flagged = pass.globalWindowKeys
+    val leaks = pass.residue
     assert(leaks.isEmpty,
       s"${leaks.size} key(s) left session state behind:\n" +
         leaks.mkString("\n"))
-    val (sweepLines, novel) = WindowAudit.report()
+    val (sweepLines, novel) = pass.sweep
     info(s"physical sweep: ${sweepLines.size} distinct single-partition " +
       s"window shape(s), ${novel.size} NOVEL")
     assert(novel.isEmpty,

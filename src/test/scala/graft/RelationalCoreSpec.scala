@@ -19,11 +19,11 @@ class RelationalCoreSpec extends GraftSuite {
       "1:1 (r13, VERDICT r12 #2: drift.py must gate every key — two " +
       "r12 keys were committed without anchor rows and went ungated)") {
     // LITERALLY the same parse Bench.scala uses (shared
-    // BaselineAnchors helper, ADVICE r13 — previously the regexes
-    // were copies and could drift on a format change). This test is
-    // deliberately env-AGNOSTIC (no local[N]/sf filter): a key must
-    // be anchored regardless of which box anchored it.
-    val anchored = BaselineAnchors.latestKeys()
+    // BaselineAnchors helper — separate copies of the regexes could
+    // drift on a format change). This test is deliberately
+    // env-AGNOSTIC (no local[N]/sf filter): a key must be anchored
+    // regardless of which box anchored it.
+    val anchored = BaselineAnchors.readText().flatMap(BaselineAnchors.latestKeys)
       .getOrElse(fail("no per-query anchor table found in BASELINE.md"))
     val board = SparkEntry.queries.keySet
     assert(board -- anchored == Set.empty[String],

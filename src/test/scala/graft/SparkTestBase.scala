@@ -19,12 +19,12 @@ object SparkTestBase {
   }
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+  // GRAFT_TEST_SF overrides the fixture dir for one-off deeper sweeps
+  // (e.g. the determinism sweep at sf0.01 before a driver round)
+  def sf: String = sys.env.getOrElse("GRAFT_TEST_SF", sf0001)
 }
 
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
-  // GRAFT_TEST_SF overrides the fixture dir for one-off deeper sweeps
-  // (e.g. the determinism sweep at sf0.01 before a driver round)
-  def sf: String =
-    sys.env.getOrElse("GRAFT_TEST_SF", SparkTestBase.sf0001)
+  def sf: String = SparkTestBase.sf
 }
