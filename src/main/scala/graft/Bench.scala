@@ -4,21 +4,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Verify/tests pin UTC; the events fixture is timestamp[us]/NTZ so
-      // the NTZ→Timestamp cast is session-timezone-dependent — an unpinned
-      // Bench on a non-UTC host would time ts-dependent queries over
-      // shifted instants (different cardinalities than Verify measures).
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus.toInt)
     // Untimed warm-up: JVM/codegen/session initialization is fixed cost,
     // not operator cost — first timed query otherwise absorbs ~4-5 s.
     // Best-effort: a bad sfDir must still fall through to the timed
     // loop (which degrades per-query to -1) and emit the JSON line.
+    // Hermetic: its temp directories and checkpoint blocks do not
+    // outlive it.
+    val warmDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def warmDir(prefix: String): String = {
+      warmDirs += java.nio.file.Files.createTempDirectory(prefix)
+      warmDirs.last.toString
+    }
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -27,8 +24,7 @@ object Bench {
       // output FS init, ~1.7 s): otherwise whichever write-key the map
       // iterates first absorbs it — one key reshuffle moved that cost
       // onto scan_partition_pruned (0.9 -> 2.5 s with identical code)
-      val wtmp = java.nio.file.Files
-        .createTempDirectory("graft_bench_warm").toString
+      val wtmp = warmDir("graft_bench_warm")
       spark.range(100L).selectExpr("id", "id % 3 AS p")
         .write.mode("overwrite").partitionBy("p").parquet(wtmp)
       spark.read.parquet(wtmp).count()
@@ -40,8 +36,7 @@ object Bench {
       // driver run with identical code (isolation-cold reproduces
       // 3.6-4.3 s; warm, the key is ~1.5 s). A watermark + stateful
       // dedup over a 10-row file stream exercises that exact path.
-      val stmp = java.nio.file.Files
-        .createTempDirectory("graft_bench_warm_stream").toString
+      val stmp = warmDir("graft_bench_warm_stream")
       spark.range(10L).selectExpr("id", "timestamp_seconds(id) AS ts")
         .write.mode("overwrite").parquet(stmp)
       // 8 shuffle partitions = the streaming keys' own config
@@ -97,11 +92,14 @@ object Bench {
         .join(org.apache.spark.sql.functions.broadcast(
           wtok.limit(100)), Seq("w"), "left")
         .selectExpr("sum(count)").collect()
+      Ckpt.free(wtok)
       // events.parquet footer: every streaming key scans it via
       // Tables.events' schema probe
       spark.read.parquet(s"$sfDir/events.parquet").selectExpr("count(*)")
         .collect()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up failed: ${e.toString.take(200)}")
+    } finally warmDirs.foreach(sources.Staging.deleteTree)
     // SPARK_GRAFT_ONLY=key1,key2 benches a subset — isolation runs for
     // chasing per-key regressions without the 157-query wall time
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -158,7 +156,11 @@ object Bench {
             rows
         }
       }.getOrElse(Map.empty)
-      catch { case _: Throwable => Map.empty }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] anchor read failed, drift gate " +
+          s"disarmed: ${e.toString.take(200)}")
+        Map.empty
+      }
     val flagged = firstPass.filter { case (k, v) =>
       anchors.get(k).exists(a => v > 2.0 * a && v - a > 0.4) }
     val reruns = flagged.flatMap { case (name, _) =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,14 +16,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val k = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // warm-up
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
@@ -39,18 +31,7 @@ object ScaleSmoke {
     // 1.0 s warm standalone (a BroadcastHashJoin plan, ~3× at ×16).
     // The envelope metric is the SHAPE's asymptotic cost, so take the
     // warm minimum; single-run history (≤ r8) reads ~1 run hotter.
-    // SPARK_GRAFT_SHAPES=name1,name2 restricts the run to a shape
-    // subset (r14: the K=128 deep-replication probe only re-runs the
-    // worst-ratio shapes — a full suite at 77M rows is hours of
-    // output-bound wedge work for no new signal). Skipped shapes
-    // report NaN and are dropped from the ratio table.
-    val shapeSel: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_SHAPES")
-        .map(_.split(",").map(_.trim).toSet)
     def time(label: String)(body: => Long): (String, Double, Long) = {
-      val name = label.drop(label.indexOf('/') + 1)
-      if (shapeSel.exists(sel => !sel.contains(name)))
-        return (label, Double.NaN, 0L)
       val runs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         val rows = body
@@ -542,31 +523,12 @@ object ScaleSmoke {
       shapes5(s"x$k", docsK, k) ++ shapes6(s"x$k", embK) ++
       shapes7(s"x$k", docsK, k)
 
-    // TopOneToMinStruct rule: identical top-1-per-key query, with and
-    // without the rewrite (rule session shares the context but owns
-    // its optimizer extras)
-    val opt = spark.newSession()
-    opt.experimental.extraOptimizations = Seq(graft.plans.TopOneToMinStruct)
-    def top1(s: SparkSession): Long = {
-      val li = (1 to k).map(i =>
-        Tables.lineitem(s, sfDir).withColumn("rep", lit(i)))
-        .reduce(_ unionByName _)
-      val w = Window.partitionBy("l_orderkey")
-        .orderBy(col("l_extendedprice"), col("l_linenumber"))
-      li.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .groupBy("l_returnflag").count().count()
-    }
-    val rules = Seq(time(s"x$k/top1_window")(top1(spark)),
-      time(s"x$k/top1_rule_minstruct")(top1(opt)))
-    rules.filterNot(_._2.isNaN).foreach { case (l, s, n) =>
-      println(f"$l%-22s $s%7.2f s  ($n rows)") }
-    (r1 ++ rk).filterNot(_._2.isNaN).foreach { case (l, s, n) =>
+    (r1 ++ rk).foreach { case (l, s, n) =>
       println(f"$l%-18s $s%7.2f s  ($n rows)") }
     println("-- ratio (xK / x1), linear target ≈ K on equal parallelism --")
-    r1.zip(rk).filterNot(p => p._1._2.isNaN || p._2._2.isNaN)
-      .foreach { case ((l1, s1, _), (_, sk, _)) =>
-        println(f"${l1.drop(3)}%-15s ${sk / s1}%5.1f× (K=$k)")
-      }
+    r1.zip(rk).foreach { case ((l1, s1, _), (_, sk, _)) =>
+      println(f"${l1.drop(3)}%-15s ${sk / s1}%5.1f× (K=$k)")
+    }
     spark.stop()
   }
 }

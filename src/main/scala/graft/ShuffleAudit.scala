@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Shuffle-volume audit (r13; board-wide with a regression gate since
@@ -91,13 +90,8 @@ object ShuffleAudit {
         Map.empty
       } else committed
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 32 cores: the width tools/shuffle_expected.tsv was calibrated at
+    val spark = Session.build(32)
 
     val inputB = new java.util.concurrent.atomic.AtomicLong(0L)
     val shufWB = new java.util.concurrent.atomic.AtomicLong(0L)

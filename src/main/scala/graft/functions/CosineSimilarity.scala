@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -102,57 +102,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for the engine's native functions — both the runtime
-  * route (register on an existing session) and the
-  * SparkSessionExtensions route (spark.sql.extensions=graft.functions.
-  * GraftExtensions for cluster-wide installation). */
+/** Registration for the engine's native functions on an existing
+  * session: `cosine_sim`, `hamming_bits`, `lsh_sigs` and `pq_codes`. */
 object GraftFunctions {
-  val cosineSimBuilder: Seq[Expression] => Expression =
-    exprs => CosineSimilarity(exprs(0), exprs(1))
-  val hammingBitsBuilder: Seq[Expression] => Expression =
-    exprs => StringHamming(exprs(0), exprs(1))
-  val lshSigsBuilder: Seq[Expression] => Expression =
-    exprs => LshSignatures(exprs(0))
-  val pqCodesBuilder: Seq[Expression] => Expression =
-    exprs => PqAssignCodes(exprs(0), exprs(1))
-
   /** Registers each kernel the session lacks. Keys call this during
-    * construction because a plain session has no [[GraftExtensions]];
-    * checking first keeps the repeat calls from replacing (and
-    * logging a WARN for) a registration that is already there. */
+    * construction, so a key runs on any session, including one not
+    * built by [[graft.Session]]; checking first keeps the repeat calls
+    * from replacing (and logging a WARN for) a registration that is
+    * already there. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    Seq("cosine_sim" -> cosineSimBuilder, "hamming_bits" -> hammingBitsBuilder,
-        "lsh_sigs" -> lshSigsBuilder, "pq_codes" -> pqCodesBuilder)
+    Seq[(String, Seq[Expression] => Expression)](
+      "cosine_sim" -> (e => CosineSimilarity(e(0), e(1))),
+      "hamming_bits" -> (e => StringHamming(e(0), e(1))),
+      "lsh_sigs" -> (e => LshSignatures(e(0))),
+      "pq_codes" -> (e => PqAssignCodes(e(0), e(1))))
       .foreach { case (name, builder) =>
         if (!registry.functionExists(
             org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
           registry.createOrReplaceTempFunction(name, builder, "built-in")
       }
-  }
-}
-
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      GraftFunctions.cosineSimBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("hamming_bits"),
-      new ExpressionInfo(classOf[StringHamming].getName, "hamming_bits"),
-      GraftFunctions.hammingBitsBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_sigs"),
-      new ExpressionInfo(classOf[LshSignatures].getName, "lsh_sigs"),
-      GraftFunctions.lshSigsBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("pq_codes"),
-      new ExpressionInfo(classOf[PqAssignCodes].getName, "pq_codes"),
-      GraftFunctions.pqCodesBuilder))
-    // top-1-per-key windows → min(struct) aggregation (see
-    // graft.plans.TopOneToMinStruct for the safety gates)
-    ext.injectOptimizerRule(_ => graft.plans.TopOneToMinStruct)
   }
 }

@@ -45,14 +45,18 @@ object Staging {
     * accumulating orphaned /tmp copies of the fixtures. */
   private[graft] def tmpDir(prefix: String): String = {
     val p = java.nio.file.Paths.get(scratchPath(prefix))
+    deleteTree(p)
+    Files.createDirectories(p)
+    p.toString
+  }
+
+  /** Deletes `p` and everything under it; a missing `p` is a no-op. */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(f => Files.deleteIfExists(f))
     }
-    Files.createDirectories(p)
-    p.toString
-  }
 
   val queries: Map[String, Q] = Map(
     // CSV ingest with a declared schema (header round-trip through the

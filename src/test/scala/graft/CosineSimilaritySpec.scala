@@ -54,20 +54,6 @@ class CosineSimilaritySpec extends GraftSuite {
     assert(df.collect()(0).getDouble(0) == 1.0)
   }
 
-  test("GraftExtensions injects cosine_sim via SparkSessionExtensions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    // the injected builder must build a working expression
-    val built = GraftFunctions.cosineSimBuilder(Seq(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(1.0f, 0.0f), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(1.0f, 0.0f), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    assert(built.eval(null).asInstanceOf[Double] == 1.0)
-  }
-
   test("native hamming_bits equals the HOF formulation and handles edge cases") {
     GraftFunctions.register(spark)
     import spark.implicits._
