@@ -38,13 +38,15 @@ class Curation2Spec extends GraftSuite {
       (900001L, "en", "srcA", "unique prefix one " + shared),
       (900002L, "en", "srcB", shared + " unique suffix two"))
       .toDF("doc_id", "lang", "source", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("c2spec").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = SparkEntry.queries("text_substring_dedup_chars")(spark, tmp)
-      .collect()
-    assert(out.length == 2)
-    out.foreach(r => assert(r.getLong(4) >= 40L,
-      s"doc ${r.getLong(0)} missed the planted 91-char duplicate run"))
+    val tmp = java.nio.file.Files.createTempDirectory("c2spec")
+    try {
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val out = SparkEntry.queries("text_substring_dedup_chars")(spark,
+        tmp.toString).collect()
+      assert(out.length == 2)
+      out.foreach(r => assert(r.getLong(4) >= 40L,
+        s"doc ${r.getLong(0)} missed the planted 91-char duplicate run"))
+    } finally sources.Staging.deleteTree(tmp)
   }
 
   test("text_boilerplate_ngrams: one row per source, df bounded by docs") {

@@ -140,23 +140,24 @@ class GovernanceSpec extends GraftSuite {
     // (2) ONE action (the staging write) completes the observation —
     // obs.get returning proves the listener delivered task-merged
     // metrics without any audit query
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_observe_spec").toString
-    observed.write.mode("overwrite").parquet(out)
-    val m = obs.get
-    assert(m.keySet == Set("n_rows", "n_null_flag", "n_bad_rows",
-      "sum_disc_price", "min_ship", "max_ship"))
-    // the piggy-backed metrics equal a dedicated audit aggregate
-    val want = Tables.lineitem(spark, sf).agg(
-      count(lit(1)), count(when(col("l_returnflag").isNull, 1)),
-      round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast("decimal(18,4)")).cast("double"), 4)).collect()(0)
-    assert(m("n_rows") == want.getLong(0))
-    assert(m("n_null_flag") == want.getLong(1))
-    assert(m("sum_disc_price") == want.getDouble(2))
-    assert(m("n_rows").asInstanceOf[Long] ==
-      spark.read.parquet(out).count(),
-      "observed row count differs from the staged batch")
+    val out = java.nio.file.Files.createTempDirectory("graft_observe_spec")
+    try {
+      observed.write.mode("overwrite").parquet(out.toString)
+      val m = obs.get
+      assert(m.keySet == Set("n_rows", "n_null_flag", "n_bad_rows",
+        "sum_disc_price", "min_ship", "max_ship"))
+      // the piggy-backed metrics equal a dedicated audit aggregate
+      val want = Tables.lineitem(spark, sf).agg(
+        count(lit(1)), count(when(col("l_returnflag").isNull, 1)),
+        round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .cast("decimal(18,4)")).cast("double"), 4)).collect()(0)
+      assert(m("n_rows") == want.getLong(0))
+      assert(m("n_null_flag") == want.getLong(1))
+      assert(m("sum_disc_price") == want.getDouble(2))
+      assert(m("n_rows").asInstanceOf[Long] ==
+        spark.read.parquet(out.toString).count(),
+        "observed row count differs from the staged batch")
+    } finally sources.Staging.deleteTree(out)
     // (3) the DECLARED DataFrame is a driver-side literal of the
     // observation — LocalTableScan, no file scan (the property that
     // matters at 100 TB: zero re-reads of what was just written)

@@ -73,39 +73,43 @@ class Round15Spec extends GraftSuite {
         .toDF("user_id", "event_id", "event_type", "sec")
         .select(col("user_id"), col("event_id"), col("event_type"),
           timestamp_seconds(col("sec")).as("ts"))
-      val tmp = Files.createTempDirectory("graft_ooo_stage").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(part.toPath, Paths.get(dir, name))
+      val tmp = Files.createTempDirectory("graft_ooo_stage")
+      try {
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = tmp.toFile.listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath, Paths.get(dir, name))
+      } finally sources.Staging.deleteTree(tmp)
       Files.setLastModifiedTime(Paths.get(dir, name),
         FileTime.fromMillis(mtime))
     }
-    // file 1 (arrives first): user 1 signs up LATE in event time;
-    // user 2 signs up early. file 2 (arrives a minute later): user 1's
-    // view+purchase carry EARLIER timestamps than the absorbed signup
-    // (the false-match bait); user 2's view+purchase are a legitimate
-    // in-window continuation.
-    write("events.parquet", Seq(
-      (1L, 10L, "signup", 100 * H),
-      (2L, 20L, "signup", 10 * H)), 1000000L)
-    write("events.b.parquet", Seq(
-      (1L, 11L, "view", 50 * H),
-      (1L, 12L, "purchase", 51 * H),
-      (2L, 21L, "view", 12 * H),
-      (2L, 22L, "purchase", 13 * H)), 1060000L)
-    SessionScope.withConf(spark)("graft.stream.maxFilesPerTrigger" -> "1") {
-      val r = Streaming.queries("stream_pattern_funnel")(spark, dir)
-        .collect()(0)
-      // batch event-time semantics: user 1's view precedes its signup
-      // -> no match; user 2 converts fully
-      assert(r.getLong(0) == 2 && r.getLong(1) == 2,
-        s"expected 2 users / 2 signups, got $r")
-      assert(r.getLong(2) == 1,
-        s"expected exactly user 2's view to match, got $r — a count " +
-          "of 2 means the out-of-order guard failed (negative-delta " +
-          "deadline match); 0 means the guard over-suppressed")
-      assert(r.getLong(3) == 1, s"expected exactly 1 purchase, got $r")
-    }
+    try {
+      // file 1 (arrives first): user 1 signs up LATE in event time;
+      // user 2 signs up early. file 2 (arrives a minute later): user 1's
+      // view+purchase carry EARLIER timestamps than the absorbed signup
+      // (the false-match bait); user 2's view+purchase are a legitimate
+      // in-window continuation.
+      write("events.parquet", Seq(
+        (1L, 10L, "signup", 100 * H),
+        (2L, 20L, "signup", 10 * H)), 1000000L)
+      write("events.b.parquet", Seq(
+        (1L, 11L, "view", 50 * H),
+        (1L, 12L, "purchase", 51 * H),
+        (2L, 21L, "view", 12 * H),
+        (2L, 22L, "purchase", 13 * H)), 1060000L)
+      SessionScope.withConf(spark)("graft.stream.maxFilesPerTrigger" -> "1") {
+        val r = Streaming.queries("stream_pattern_funnel")(spark, dir)
+          .collect()(0)
+        // batch event-time semantics: user 1's view precedes its signup
+        // -> no match; user 2 converts fully
+        assert(r.getLong(0) == 2 && r.getLong(1) == 2,
+          s"expected 2 users / 2 signups, got $r")
+        assert(r.getLong(2) == 1,
+          s"expected exactly user 2's view to match, got $r — a count " +
+            "of 2 means the out-of-order guard failed (negative-delta " +
+            "deadline match); 0 means the guard over-suppressed")
+        assert(r.getLong(3) == 1, s"expected exactly 1 purchase, got $r")
+      }
+    } finally sources.Staging.deleteTree(Paths.get(dir))
   }
 }
