@@ -18,8 +18,7 @@ object Bench {
     }
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .selectExpr("count(*)").collect()
+      Tables.lineitem(spark, sfDir).selectExpr("count(*)").collect()
       // warm the parquet WRITE path too (committer + write codegen +
       // output FS init, ~1.7 s): otherwise whichever write-key the map
       // iterates first absorbs it — one key reshuffle moved that cost
@@ -84,19 +83,18 @@ object Bench {
       // tier-up of the explode+hashagg kernel (a limit(50) warm left
       // the first full-scale text key at ~4× anchor — the kernel ran
       // too few iterations to reach C2 before the timed run).
-      val wtok = spark.read.parquet(s"$sfDir/documents.parquet")
+      val wtok = Tables.documents(spark, sfDir)
         .selectExpr("explode(split(text, ' ')) AS w")
         .groupBy("w").count().localCheckpoint(true)
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
+      Tables.documents(spark, sfDir).limit(50)
         .selectExpr("explode(split(text, ' ')) AS w")
         .join(org.apache.spark.sql.functions.broadcast(
           wtok.limit(100)), Seq("w"), "left")
         .selectExpr("sum(count)").collect()
       Ckpt.free(wtok)
-      // events.parquet footer: every streaming key scans it via
-      // Tables.events' schema probe
-      spark.read.parquet(s"$sfDir/events.parquet").selectExpr("count(*)")
-        .collect()
+      // events.parquet: every streaming key reads its footer
+      // (Tables.footerSchema) and scans it
+      Tables.events(spark, sfDir).selectExpr("count(*)").collect()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warm-up failed: ${e.toString.take(200)}")
     } finally warmDirs.foreach(sources.Staging.deleteTree)

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central table loaders for the driver-generated fixtures
   * (see TESTDATA.md). All `SparkEntry.queries` closures read their
@@ -16,6 +23,20 @@ import org.apache.spark.sql.functions._
   * predicates and prunes columns into the `FileScan parquet`, so the
   * operators built on top stay scan-efficient regardless of table
   * size. No caching/collect happens here.
+  *
+  * Schema: every load passes the schema to the reader
+  * (`spark.read.schema(...)`), taken from the table file's footer by
+  * [[footerSchema]] on the driver, so building a frame launches no
+  * Spark job. Without it Spark infers the schema with a footer-merge
+  * job per load, even for a one-file table. The footer is read again
+  * on every call: one small read at the file's tail, and no cache
+  * shared across keys, so each key stays hermetic. The footer grows
+  * with the row groups, not the rows, and the read skips the row-group
+  * metadata. A 100 TB table is many files, not the one file per table
+  * these fixtures keep; its loader would read the first file's footer
+  * only, which is the file Spark's own inference reads without
+  * `mergeSchema` (`operators.Manifest.load` does this for a version's
+  * file list).
   */
 object Tables {
 
@@ -33,9 +54,33 @@ object Tables {
     * PlanShapeSpec ("sf-scaling dimension joins carry no forced
     * broadcast hints"). */
 
+  /** The schema Spark infers for the parquet file `file`, read from its
+    * footer on the driver: the Spark row schema stored in the footer's
+    * metadata if a Spark writer left one, else the Parquet schema
+    * converted under the session's SQL conf — the two steps of Spark's
+    * own inference, without its job. When `file` is a directory (a
+    * table Spark wrote), the footer is that of its first data file by
+    * name, skipping the `_`- and `.`-prefixed names Spark's listing
+    * skips; the files of one write share one schema. */
+  private[graft] def footerSchema(spark: SparkSession, file: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(file)
+    val fs = path.getFileSystem(conf)
+    val status = fs.getFileStatus(path)
+    val data = if (!status.isDirectory) status else fs.listStatus(path)
+      .filter(f => f.isFile && !"_.".contains(f.getPath.getName.head))
+      .minBy(_.getPath.getName)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(data, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(data.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** Read one fixture table. `sfDir` is e.g. /root/testdata/sf0.01 */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -248,22 +248,17 @@ object GraphOps {
     // Degree distribution of the (denser, mod=50) co-supply graph —
     // the profiling query you run BEFORE choosing a triangle/CC
     // strategy at scale: one symmetric-degree aggregate, bucketed.
-    "graph_degree_distribution" -> ((s, d) => {
-      // r15: materialized once — the u/v union legs are different
-      // projections, so the lazy form ran the co-supply join twice.
-      // r15 #5 (session 4): end-pin the bucket-grain output and free
-      // the edge list (~4.4 MB resident in the storage census).
-      val e = coSupplyEdges(s, d, 50).localCheckpoint()
-      val out = e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node")))
+    // One lazy plan, no checkpoint: each edge emits both endpoints
+    // through one explode, so the co-supply join runs once (a u-leg
+    // union v-leg form would run it once per leg).
+    "graph_degree_distribution" -> ((s, d) =>
+      coSupplyEdges(s, d, 50)
+        .select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .groupBy((floor(col("deg") / 8) * 8).cast("bigint").as("deg_bucket"))
         .agg(count(lit(1)).as("n_nodes"),
           min(col("deg")).as("deg_min"), max(col("deg")).as("deg_max"))
-        .localCheckpoint(true)
-      graft.Ckpt.free(e)
-      out.orderBy("deg_bucket")
-    }),
+        .orderBy("deg_bucket")),
 
     // k-core decomposition by iterative peeling (r9; Seidman 1983,
     // Batagelj–Zaveršnik): drop every node with degree < k, induce

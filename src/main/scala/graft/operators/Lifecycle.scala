@@ -41,6 +41,15 @@ private[graft] object Manifest {
   /** The file paths of version `v`. */
   def read(root: String, v: Int): Seq[String] =
     Files.readString(path(root, v)).split("\n").toSeq
+
+  /** Version `v` as a frame. Its schema is the footer schema of the
+    * version's smallest path (Tables.footerSchema), the file Spark's
+    * own inference reads without `mergeSchema`; the files of a table
+    * share one schema, so reading the frame launches no schema job. */
+  def load(spark: SparkSession, root: String, v: Int): DataFrame = {
+    val paths = read(root, v)
+    spark.read.schema(Tables.footerSchema(spark, paths.min)).parquet(paths: _*)
+  }
 }
 
 /** Staged-table lifecycle operators (SURVEY.md §2.11):
@@ -316,7 +325,7 @@ object Lifecycle {
           .write.mode("append").parquet(dataDir)
         require(Manifest.commit(out, v, Manifest.files(dataDir)))
       }
-      s.read.parquet(Manifest.read(out, 1): _*)
+      Manifest.load(s, out, 1)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           round(sum(col("o_totalprice").cast("decimal(18,2)"))
@@ -341,7 +350,7 @@ object Lifecycle {
       val out = graft.sources.Staging.tmpDir("acidmerge")
       mergeFixture(s, d, out)
       def agg(v: Int): DataFrame =
-        s.read.parquet(Manifest.read(out, v): _*).groupBy("c_nationkey")
+        Manifest.load(s, out, v).groupBy("c_nationkey")
           .agg(count(lit(1)).as("n"),
             round(sum(col("c_acctbal").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
@@ -373,7 +382,7 @@ object Lifecycle {
       // RESTORE to v1: republish v1's file list
       require(Manifest.commit(out, 3, v1Files))
       def agg(v: Int): DataFrame =
-        s.read.parquet(Manifest.read(out, v): _*).groupBy("o_orderstatus")
+        Manifest.load(s, out, v).groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
@@ -449,7 +458,7 @@ object Lifecycle {
       if (!Manifest.commit(out, 2, baseF ++ bF))
         require(Manifest.commit(out, 3, Manifest.read(out, 2) ++ bF))
       def agg(v: Int): DataFrame =
-        s.read.parquet(Manifest.read(out, v): _*)
+        Manifest.load(s, out, v)
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))
@@ -576,7 +585,7 @@ object Lifecycle {
       require(Manifest.commit(clone, 2, srcFiles ++ Manifest.writeFiles(out,
         c.filter(col("c_custkey") % 2 === 1), "cloneadd")))
       def agg(root: String, v: Int, label: String): DataFrame =
-        s.read.parquet(Manifest.read(root, v): _*)
+        Manifest.load(s, root, v)
           .agg(count(lit(1)).as("n"),
             round(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"), 4)
               .as("total"))
@@ -655,7 +664,7 @@ object Lifecycle {
       // versions
       val out = graft.sources.Staging.tmpDir("manifestcdc")
       mergeFixture(s, d, out)
-      def version(v: Int): DataFrame = s.read.parquet(Manifest.read(out, v): _*)
+      def version(v: Int): DataFrame = Manifest.load(s, out, v)
         .select(col("c_custkey"), col("c_nationkey").as(s"nk$v"),
           col("c_acctbal").as(s"b$v"))
       val (v1, v2) = (version(1), version(2))
@@ -689,7 +698,7 @@ object Lifecycle {
     // the file count actually drops 8 → 1.
     "stage_manifest_compact" -> ((s, d) => {
       val out = graft.sources.Staging.tmpDir("manifestcompact")
-      def read(v: Int): DataFrame = s.read.parquet(Manifest.read(out, v): _*)
+      def read(v: Int): DataFrame = Manifest.load(s, out, v)
       val base = Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
       base.repartition(8).write.mode("overwrite").parquet(s"$out/data/small")
@@ -731,7 +740,7 @@ object Lifecycle {
       require(Manifest.commit(out, 2, v1Files.filterNot(_.contains("/b0/"))
         ++ Manifest.writeFiles(out, newB0, "b0_v2")))
       def agg(v: Int): DataFrame =
-        s.read.parquet(Manifest.read(out, v): _*).groupBy("c_nationkey")
+        Manifest.load(s, out, v).groupBy("c_nationkey")
           .agg(count(lit(1)).as("n"),
             round(sum(col("c_acctbal").cast("decimal(18,2)"))
               .cast("double"), 4).as("total"))

@@ -685,9 +685,10 @@ object Staging {
     // bounded stream (AvailableNow), aggregated and drained to a
     // memory sink — equals the batch aggregate (also oracle-checked).
     "source_streaming_files" -> ((s, d) => {
-      val schema = s.read.parquet(s"$d/lineitem.parquet").schema
       val name = "graft_src_files_" + System.nanoTime()
-      val q = s.readStream.schema(schema).parquet(s"$d/lineitem.*")
+      val q = s.readStream
+        .schema(Tables.footerSchema(s, s"$d/lineitem.parquet"))
+        .parquet(s"$d/lineitem.*")
         .groupBy("l_returnflag").count()
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()

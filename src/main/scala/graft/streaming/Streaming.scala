@@ -36,10 +36,10 @@ object Streaming {
 
   /** Streaming read of the events fixture, with `ts` mapped onto
     * `TimestampType` by Tables.normalizeEventsTs as the batch loader
-    * does. */
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val path = s"$d/events.parquet"
-    val schema = s.read.parquet(path).schema
+    * does. A file source needs its schema up front; it comes from the
+    * fixture file's footer (Tables.footerSchema), so no job runs. */
+  private[graft] def eventsStream(s: SparkSession, d: String): DataFrame = {
+    val schema = Tables.footerSchema(s, s"$d/events.parquet")
     // FileStreamSource requires a directory or glob, not a bare file
     // path — `events.*` matches exactly the fixture file and makes the
     // sf dir the inferred basePath.
@@ -158,8 +158,8 @@ object Streaming {
     // bounded language census. Batch-equivalence with the chunk CTE
     // is the oracle.
     "stream_chunk_ingest" -> ((s, d) => {
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val chunks = s.readStream.schema(schema)
+      val chunks = s.readStream
+        .schema(Tables.footerSchema(s, s"$d/documents.parquet"))
         .parquet(s"$d/documents.*")
         .select(col("lang"), col("text"), length(col("text")).as("len"))
         .select(col("lang"), col("text"), explode(expr(
@@ -204,7 +204,7 @@ object Streaming {
       val src = graft.sources.Staging.tmpDir("annsrc")
       val idx = graft.sources.Staging.tmpDir("annidx")
       val stats = graft.sources.Staging.tmpDir("annstats")
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0).coalesce(1)
         .write.mode("append").parquet(src)
       docs.filter(col("doc_id") % 2 === 1).coalesce(1)

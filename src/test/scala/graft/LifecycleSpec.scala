@@ -151,7 +151,7 @@ class LifecycleSpec extends GraftSuite {
       "AS OF v1 must see exactly the v1 commit")
     // the v2 manifest covers both commits — the "current" read
     val out = graft.sources.Staging.scratchPath("timetravel")
-    val v2Rows = spark.read.parquet(Manifest.read(out, 2): _*).count()
+    val v2Rows = Manifest.load(spark, out, 2).count()
     assert(v2Rows ==
       base.filter(col("o_orderkey") % 3 === 0 ||
         col("o_orderkey") % 3 === 1).count(),
