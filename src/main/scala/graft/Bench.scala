@@ -38,10 +38,10 @@ object Bench {
       val stmp = warmDir("graft_bench_warm_stream")
       spark.range(10L).selectExpr("id", "timestamp_seconds(id) AS ts")
         .write.mode("overwrite").parquet(stmp)
-      // 8 shuffle partitions = the streaming keys' own config
-      // (Streaming.withStreamShuffle) so the per-partition state-store
-      // instances this warms are the ones the real keys reuse
-      SessionScope.withConf(spark)("spark.sql.shuffle.partitions" -> "8") {
+      // the streaming keys' own scope (8 shuffle partitions, the
+      // checkpoint filesystem), so the state-store instances and the
+      // filesystem path this warms are the ones the real keys reuse
+      streaming.Streaming.withStreamShuffle(spark) {
         val wq = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
           .parquet(stmp)
           .withWatermark("ts", "1 hour")

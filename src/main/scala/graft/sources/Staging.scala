@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.{SessionScope, Tables}
 
@@ -685,17 +684,12 @@ object Staging {
     // bounded stream (AvailableNow), aggregated and drained to a
     // memory sink — equals the batch aggregate (also oracle-checked).
     "source_streaming_files" -> ((s, d) => {
-      val name = "graft_src_files_" + System.nanoTime()
-      val q = s.readStream
+      val counts = s.readStream
         .schema(Tables.footerSchema(s, s"$d/lineitem.parquet"))
         .parquet(s"$d/lineitem.*")
         .groupBy("l_returnflag").count()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(name)
-      s.catalog.dropTempView(name)
-      sink.select(col("l_returnflag"), col("count").as("n"))
+      graft.streaming.Streaming.drain(counts, "complete")
+        .select(col("l_returnflag"), col("count").as("n"))
         .orderBy("l_returnflag")
     }),
 

@@ -55,23 +55,32 @@ object Streaming {
     Tables.normalizeEventsTs(capped.parquet(s"$d/events.*"))
   }
 
-  /** Run a stream with few shuffle partitions. Streaming state is
-    * partitioned by `spark.sql.shuffle.partitions` AT QUERY START, and
-    * every micro-batch pays one state-store open/commit per partition:
-    * at local[32] that is 32 store instances + checkpoint files per
-    * batch for kilobytes of state — pure fixed overhead. 8 partitions
-    * keeps the commit cost bounded; on a real cluster this knob is
-    * sized to state volume (state rows / partition ≈ store block), not
-    * to core count. Restored after the stream drains so batch queries
-    * keep the session default. */
-  private def withStreamShuffle[T](s: SparkSession)(f: => T): T =
-    SessionScope.withConf(s)("spark.sql.shuffle.partitions" -> "8")(f)
+  /** The scope every streaming query of the board starts in. Both
+    * settings are read when a query starts, so they must hold there:
+    *  - `spark.sql.shuffle.partitions` = 8. Streaming state is
+    *    partitioned by it at query start, and every micro-batch opens
+    *    and commits one state store per partition, each with its own
+    *    delta and checksum files. The board's state is kilobytes, so the
+    *    count is fixed cost; 8 bounds it whatever the session's width.
+    *    On a cluster it is sized to state volume, not to core count.
+    *  - `fs.AbstractFileSystem.file.impl` = [[NoForkLocalFs]]. The offset
+    *    log, commit log and state store write through a `FileContext`,
+    *    whose local filesystem otherwise forks `chmod` per file and
+    *    `readlink` per rename. Only `FileContext` users see it: the
+    *    cached `FileSystem` instances, the atomic renames and the
+    *    checksum files stay as they are.
+    * Both are restored when the block exits, so batch queries keep the
+    * session's own settings. */
+  private[graft] def withStreamShuffle[T](s: SparkSession)(f: => T): T =
+    SessionScope.withConf(s)(
+      "spark.sql.shuffle.partitions" -> "8",
+      "fs.AbstractFileSystem.file.impl" -> classOf[NoForkLocalFs].getName)(f)
 
   /** Drain a streaming DataFrame into a memory sink and return the
     * sink contents as a batch DataFrame. The sink's temp view is
     * dropped once the frame has resolved it: the frame keeps the
     * sink's rows, the session keeps no name for them. */
-  private def drain(sdf: DataFrame, mode: String): DataFrame =
+  private[graft] def drain(sdf: DataFrame, mode: String): DataFrame =
     withStreamShuffle(sdf.sparkSession) {
       val name = "graft_sink_" + sinkId.incrementAndGet()
       val q = sdf.writeStream.format("memory").queryName(name)
@@ -659,9 +668,7 @@ object Streaming {
       Tables.documents(s, d).repartition(2)
         .write.mode("overwrite").parquet(src)
       withStreamShuffle(s) {
-        val schema = s.read.parquet(src).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
+        val q = fileBatches(s, src)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val scored = batch.withColumn("toks", split(col("text"), " "))
@@ -707,10 +714,8 @@ object Streaming {
       Tables.events(s, d).filter(col("user_id") % 5 === 0)
         .repartition(3).write.mode("overwrite").parquet(src)
       withStreamShuffle(s) {
-        val schema = s.read.parquet(src).schema
         var version = 0 // driver-held head pointer (the manifest role)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
+        val q = fileBatches(s, src)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val part = batch.groupBy("user_id")
@@ -754,9 +759,7 @@ object Streaming {
       Tables.events(s, d).repartition(4)
         .write.mode("overwrite").parquet(src)
       withStreamShuffle(s) {
-        val schema = s.read.parquet(src).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
+        val q = fileBatches(s, src)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.dropDuplicates("event_id")
@@ -800,9 +803,7 @@ object Streaming {
       val ck = graft.sources.Staging.tmpDir("ckpt_meta")
       val ev = Tables.events(s, d)
       def run(): Unit = withStreamShuffle(s) {
-        val schema = s.read.parquet(src).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
+        val q = fileBatches(s, src)
           .writeStream
           .option("checkpointLocation", ck)
           .foreachBatch { (batch: DataFrame, bid: Long) =>
@@ -888,9 +889,7 @@ object Streaming {
       val src = twoBatchSource(s,
         e.filter(col("us") > mid).select("event_id", "ts"),
         e.filter(col("us") <= mid).select("event_id", "ts"), "late")
-      val schema = s.read.parquet(src).schema
-      val sdf = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val sdf = fileBatches(s, src)
         .withWatermark("ts", "30 minutes")
         .groupBy(window(col("ts"), "1 hour")).count()
         .select(col("window.start").as("ws"), col("count").as("n"))
@@ -916,13 +915,18 @@ object Streaming {
       val src = twoBatchSource(s,
         e.filter(col("event_id") % 2 === 0),
         e.filter(col("event_id") % 2 =!= 0), "upd")
-      val schema = s.read.parquet(src).schema
-      val sdf = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val sdf = fileBatches(s, src)
         .groupBy("user_id").agg(count(lit(1)).as("n"))
       drain(sdf, "update").orderBy("user_id", "n")
     }),
   )
+
+  /** The parquet files in `src`, which the calling key has just
+    * written, as a stream of one file per micro-batch. The schema comes
+    * from their footer (Tables.footerSchema), so no inference job runs. */
+  private def fileBatches(s: SparkSession, src: String): DataFrame =
+    s.readStream.schema(Tables.footerSchema(s, src))
+      .option("maxFilesPerTrigger", "1").parquet(src)
 
   /** Stage two single-file parquet batches into one source dir with
     * FORCED modification times (fixed epoch base) so that

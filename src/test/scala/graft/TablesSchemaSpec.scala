@@ -93,6 +93,24 @@ class TablesSchemaSpec extends GraftSuite {
     } finally Staging.deleteTree(root)
   }
 
+  test("each file-stream key's source schema, read from the footer of " +
+      "the files it just wrote, equals Spark's inferred schema") {
+    // key -> the scratch directory its file stream reads
+    val sources = Seq(
+      "stream_quality_gate" -> "qgate_src",
+      "stream_upsert_apply" -> "cdc_src",
+      "stream_multi_microbatch_stage" -> "mb_src",
+      "stream_checkpoint_restart" -> "ckpt_src",
+      "stream_late_data_drop" -> "late_src",
+      "stream_update_running_counts" -> "upd_src")
+    for ((key, dir) <- sources) {
+      Streaming.queries(key)(spark, sf)
+      val src = Staging.scratchPath(dir)
+      assert(Tables.footerSchema(spark, src) == spark.read.parquet(src).schema,
+        key)
+    }
+  }
+
   test("building the table frames, the events stream and " +
       "graph_degree_distribution's frame launches no job") {
     val jobs = new AtomicInteger(0)
